@@ -5,7 +5,10 @@ import graft.core._
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.Base64
+import java.util.concurrent.ConcurrentSkipListMap
+import java.util.concurrent.atomic.LongAdder
 import java.util.concurrent.locks.ReentrantReadWriteLock
+import scala.jdk.CollectionConverters._
 
 /** HTTP facade over the query engine (api/mod.rs:5-16, 211-246) on the
   * JDK's built-in httpserver — zero external dependencies, matching this
@@ -29,6 +32,24 @@ import java.util.concurrent.locks.ReentrantReadWriteLock
   * Concurrency: one ReentrantReadWriteLock around the session — many
   * readers, single writer, exactly the reference's `RwLock<Session>`
   * (api/mod.rs:62-67). JSON in/out is hand-rolled (flat, known shapes).
+  *
+  * Transport: Nagle's algorithm is off on every accepted connection. The
+  * JDK server writes each response in two socket writes, the header block
+  * from `sendResponseHeaders` and then the fixed-length body; with Nagle
+  * on, the small body segment waits for the ACK of the headers, which the
+  * client holds back for its delayed-ACK timer (at least 40 ms on Linux),
+  * so every round trip cost 44 ms whatever the query. The JDK's only switch
+  * is the `sun.net.httpserver.nodelay` property, which the constructor sets
+  * to true unless it is already set, so an explicit `-D` still wins. The
+  * JDK reads it once per process, when the first `HttpServer` is built: an
+  * application that builds its own JDK `HttpServer` before this facade
+  * must pass `-Dsun.net.httpserver.nodelay=true` itself.
+  *
+  * `/metrics` adds two integer counters per route to the graph gauges:
+  * requests answered and the server-side microseconds spent on them, from
+  * the handler's entry until the response starts going out. Set against a
+  * client's round trip, they tell transport time apart from handler time;
+  * a `/metrics` request is counted after its own body is rendered.
   */
 final class HttpFacade(
     session: GraftSession,
@@ -36,9 +57,11 @@ final class HttpFacade(
     apiKey: Option[String] = None,
     rateLimitPerSec: Int = 0,
     corsOrigins: Seq[String] = Seq("*")) {
+  import HttpFacade.{JsonType, NoDelayProperty, PrometheusType}
   import JsonCodec.{fields, jstr, long, longArray}
 
   private val lock = new ReentrantReadWriteLock()
+  sys.props.getOrElseUpdate(NoDelayProperty, "true") // before the first HttpServer.create
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   // a real pool: many concurrent readers (the RwLock below is what
   // serializes writers); the JDK default (no executor) would run every
@@ -65,9 +88,9 @@ final class HttpFacade(
 
   // ---------------------------------------------------------------- HTTP
 
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
+  private def respond(ex: HttpExchange, code: Int, body: String, contentType: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
+    ex.getResponseHeaders.set("Content-Type", contentType)
     corsHeaders(ex)
     ex.sendResponseHeaders(code, bytes.length.toLong)
     val os = ex.getResponseBody
@@ -136,32 +159,73 @@ final class HttpFacade(
     else Right(new String(bytes, StandardCharsets.UTF_8))
   }
 
+  /** Requests answered and server-side microseconds spent, per route. */
+  private final class RouteStats {
+    val requests = new LongAdder
+    val micros = new LongAdder
+    def record(startedNanos: Long): Unit = {
+      requests.increment()
+      micros.add((System.nanoTime() - startedNanos) / 1000)
+    }
+  }
+  private val routeStats = new ConcurrentSkipListMap[String, RouteStats]()
+
+  private def routeCounters: String = {
+    val stats = routeStats.asScala.toSeq
+    def counter(name: String, help: String, value: RouteStats => Long): String =
+      s"# HELP $name $help\n# TYPE $name counter\n" +
+        stats.map { case (path, r) => s"""$name{route="$path"} ${value(r)}\n""" }.mkString
+    counter("graft_http_requests_total", "Requests answered, per route", _.requests.sum) +
+      counter("graft_http_server_micros_total",
+        "Server-side microseconds spent on requests, per route", _.micros.sum)
+  }
+
+  private def route(path: String, method: String, open: Boolean = false, contentType: String = JsonType)
+      (f: String => (Int, String)): Unit = {
+    val stats = new RouteStats
+    routeStats.put(path, stats)
+    server.createContext(path, ex => handle(stats, method, open, contentType)(f)(ex))
+  }
+
   /** `open` routes (/health) bypass rate limiting and auth — the reference
     * keeps the health check out of both layers (api/mod.rs:211-213).
+    * Each exchange is counted just before its response goes out, so a
+    * client that has its answer finds its request in `/metrics`.
     */
-  private def handle(method: String, open: Boolean = false)(f: String => (Int, String))(ex: HttpExchange): Unit =
+  private def handle(stats: RouteStats, method: String, open: Boolean, contentType: String)
+      (f: String => (Int, String))(ex: HttpExchange): Unit = {
+    val started = System.nanoTime()
+    def send(code: Int, body: String, bodyType: String = JsonType): Unit = {
+      stats.record(started)
+      respond(ex, code, body, bodyType)
+    }
     try {
-      if (ex.getRequestMethod == "OPTIONS")
+      if (ex.getRequestMethod == "OPTIONS") {
+        stats.record(started)
         preflight(ex)
-      else if (!open && !rateLimiter.tryAcquire())
-        respond(ex, 429, """{"error":"too many requests"}""")
+      } else if (!open && !rateLimiter.tryAcquire())
+        send(429, """{"error":"too many requests"}""")
       else if (!open && !authorized(ex))
-        respond(ex, 401, """{"error":"unauthorized"}""")
+        send(401, """{"error":"unauthorized"}""")
       else if (ex.getRequestMethod != method)
-        respond(ex, 405, """{"error":"method not allowed"}""")
+        send(405, """{"error":"method not allowed"}""")
       else readBody(ex) match {
-        case Left(err) => respond(ex, 413, s"""{"error":${jstr(err)}}""")
+        case Left(err) => send(413, s"""{"error":${jstr(err)}}""")
         case Right(body) =>
           val (code, out) = f(body)
-          respond(ex, code, out)
+          send(code, out, contentType)
       }
     } catch {
-      case e: Throwable =>
+      // once the headers are out (a client that hung up mid-body) no second
+      // response can be sent; close() below ends the exchange
+      case e: Throwable => if (ex.getResponseCode == -1) {
         // jstr guards null messages; fall back to the class name so the
         // 500 envelope is always sent
         val msg = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
-        respond(ex, 500, s"""{"error":${jstr(msg)}}""")
+        send(500, s"""{"error":${jstr(msg)}}""")
+      }
     } finally ex.close()
+  }
 
   private def reading[A](f: => A): A = {
     lock.readLock().lock()
@@ -204,7 +268,7 @@ final class HttpFacade(
     }
 
   private def registerRoutes(): Unit = {
-    server.createContext("/signal/retract", handle("POST") { body =>
+    route("/signal/retract", "POST") { body =>
       val fs = fields(body)
       (for { f <- long(fs, "from_entity"); t <- long(fs, "to_entity") }
         yield (f, t)) match {
@@ -216,9 +280,9 @@ final class HttpFacade(
           }
         }
       }
-    } _)
+    }
 
-    server.createContext("/signals", handle("POST") { body =>
+    route("/signals", "POST") { body =>
       // body: {"signals":[{...},{...}]} — string-aware array split, so
       // braces inside signal values can't break elements apart
       val objs = JsonCodec.splitArrayObjects(body)
@@ -231,9 +295,9 @@ final class HttpFacade(
           case Left(err) => (400, s"""{"error":${jstr(err.message)}}""")
         }
       }
-    } _)
+    }
 
-    server.createContext("/signal", handle("POST") { body =>
+    route("/signal", "POST") { body =>
       parseSignal(fields(body)) match {
         case None => (400, """{"error":"invalid signal"}""")
         case Some(sig) => writing {
@@ -243,18 +307,18 @@ final class HttpFacade(
           }
         }
       }
-    } _)
+    }
 
-    server.createContext("/query", handle("POST") { body =>
+    route("/query", "POST") { body =>
       parseQuery(fields(body)) match {
         case Left(err) => (400, s"""{"error":${jstr(err)}}""")
         case Right(req) => reading {
           (200, renderResponse(QueryApi.execute(session, req)))
         }
       }
-    } _)
+    }
 
-    server.createContext("/certify", handle("POST") { body =>
+    route("/certify", "POST") { body =>
       parseQuery(fields(body)) match {
         case Left(err) => (400, s"""{"error":${jstr(err)}}""")
         case Right(req) => reading {
@@ -267,52 +331,61 @@ final class HttpFacade(
           }
         }
       }
-    } _)
+    }
 
     // the reference export handler (api/mod.rs:222, handlers.rs:505-535):
     // snapshot under the read lock, canonical bytes base64'd + the
     // commutative checksum alongside — the import side enforces limits
-    server.createContext("/export", handle("POST") { _ =>
+    route("/export", "POST") { _ =>
       reading {
         val c = graft.verify.Canonical.fromGraph(session.graph)
         val b64 = Base64.getEncoder.encodeToString(graft.verify.Canonical.toBytes(c))
         (200, s"""{"success":true,"data":${jstr(b64)},"checksum":${graft.verify.Canonical.checksum(c)}}""")
       }
-    } _)
+    }
 
-    server.createContext("/status", handle("GET") { _ =>
+    route("/status", "GET") { _ =>
       reading {
         val s = StatusApi.status(session)
         (200, s"""{"nodes":${s.nodeCount},"edges":${s.edgeCount},""" +
           s""""stable_edges":${s.stableEdgeCount},"stage":${jstr(s.stage)}}""")
       }
-    } _)
+    }
 
-    server.createContext("/stage", handle("GET") { _ =>
+    route("/stage", "GET") { _ =>
       reading {
         val p = StatusApi.stage(session)
         (200, s"""{"current":${jstr(p.current)},"next":${p.next.map(jstr).getOrElse("null")},""" +
           s""""percent":${p.percent}}""")
       }
-    } _)
+    }
 
-    server.createContext("/hash", handle("GET") { _ =>
+    route("/hash", "GET") { _ =>
       reading {
         val h = StatusApi.hash(session)
         (200, s"""{"checksum":${h.checksum},"state_hash":${jstr(h.stateHash)}}""")
       }
-    } _)
+    }
 
-    server.createContext("/metrics", handle("GET") { _ =>
-      reading {
+    route("/metrics", "GET", contentType = PrometheusType) { _ =>
+      val gauges = reading {
         val m = GraphMetrics.fromGraph(session.graph)
         val stage = new StageAssessor().assessFromMetrics(m)
-        (200, StatusApi.prometheusText(m, stage))
+        StatusApi.prometheusText(m, stage)
       }
-    } _)
+      (200, gauges + routeCounters)
+    }
 
-    server.createContext("/health", handle("GET", open = true) { _ =>
+    route("/health", "GET", open = true) { _ =>
       reading { (200, s"""{"healthy":${StatusApi.health(session)}}""") }
-    } _)
+    }
   }
+}
+
+object HttpFacade {
+  /** The JDK server's switch for TCP_NODELAY on accepted connections. */
+  private val NoDelayProperty = "sun.net.httpserver.nodelay"
+  private val JsonType = "application/json"
+  /** Prometheus text exposition format. */
+  private val PrometheusType = "text/plain; version=0.0.4; charset=utf-8"
 }

@@ -52,8 +52,34 @@ class HttpFacadeSpec extends AnyFunSuite {
       val status = get(c, s"$base/status")
       assert(status.statusCode === 200 && status.body.contains(""""nodes":2"""))
       assert(get(c, s"$base/health").body.contains("true"))
-      assert(get(c, s"$base/metrics").body.contains("graft_nodes_total 2"))
+      val metrics = get(c, s"$base/metrics")
+      assert(metrics.headers.firstValue("Content-Type").orElse("") ===
+        "text/plain; version=0.0.4; charset=utf-8")
+      assert(metrics.body.contains("graft_nodes_total 2"))
+      // each request is counted before its response goes out; this
+      // /metrics request is counted only after its own body is rendered
+      assert(metrics.body.contains("""graft_http_requests_total{route="/query"} 3"""))
+      assert(metrics.body.contains("""graft_http_requests_total{route="/health"} 1"""))
+      assert(metrics.body.contains("""graft_http_requests_total{route="/metrics"} 0"""))
+      val queryMicros = """graft_http_server_micros_total\{route="/query"\} (\d+)""".r
+      assert(queryMicros.findFirstMatchIn(metrics.body).exists(_.group(1).toLong > 0))
       assert(get(c, s"$base/hash").body.contains("state_hash"))
+    }
+  }
+
+  test("keep-alive round trips stay under the Nagle/delayed-ACK floor") {
+    withServer { (c, base) =>
+      post(c, s"$base/signal", """{"entity_id": 1, "attribute": "k", "value": "a"}""")
+      val micros = (1 to 30).map { _ =>
+        val started = System.nanoTime()
+        val q = post(c, s"$base/query", """{"type": "lookup", "entity_id": 1}""")
+        assert(q.statusCode === 200)
+        (System.nanoTime() - started) / 1000
+      }.sorted
+      // with Nagle on, each response's body segment waits for the client's
+      // delayed ACK of its headers: at least 40 ms a round trip
+      val median = micros(micros.length / 2)
+      assert(median < 20000L, s"median round trip $median us")
     }
   }
 
