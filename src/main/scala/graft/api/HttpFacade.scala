@@ -49,7 +49,9 @@ import scala.jdk.CollectionConverters._
   * requests answered and the server-side microseconds spent on them, from
   * the handler's entry until the response starts going out. Set against a
   * client's round trip, they tell transport time apart from handler time;
-  * a `/metrics` request is counted after its own body is rendered.
+  * a `/metrics` request is counted after its own body is rendered. Two
+  * more counters show what `/certify` and `/hash` reuse: state-hash roots
+  * served and the node row chunks re-encoded for them.
   */
 final class HttpFacade(
     session: GraftSession,
@@ -373,7 +375,7 @@ final class HttpFacade(
         val stage = new StageAssessor().assessFromMetrics(m)
         StatusApi.prometheusText(m, stage)
       }
-      (200, gauges + routeCounters)
+      (200, gauges + StatusApi.stateHashText(session) + routeCounters)
     }
 
     route("/health", "GET", open = true) { _ =>

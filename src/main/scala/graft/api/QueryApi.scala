@@ -1,7 +1,7 @@
 package graft.api
 
 import graft.core._
-import graft.verify.{Canonical, QueryCertificate}
+import graft.verify.{InMemoryStateHash, QueryCertificate}
 
 /** The external query surface: the reference's `POST /query` request
   * union and response envelope (api/types.rs:239-385, handlers.rs:220-401)
@@ -160,7 +160,7 @@ object QueryApi {
     val resp = execute(session, req)
     if (!resp.success)
       return Left(GraftError.InvalidQuery(resp.error.getOrElse("invalid query")))
-    val stateHash = Canonical.merkleStateHash(Canonical.fromGraph(session.graph))
+    val stateHash = InMemoryStateHash.rootWithStats(session.graph).root
     val grounding =
       if (!resp.found) Grounding.Unknown
       else req match {

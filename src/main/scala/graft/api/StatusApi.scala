@@ -2,7 +2,7 @@ package graft.api
 
 import graft.core._
 import graft.graph.{GraphFrames, GraphTables}
-import graft.verify.{Canonical, DistributedChecksum, DistributedStateHash}
+import graft.verify.{DistributedStateHash, InMemoryStateHash}
 
 /** The metric/health surfaces (`GET /status`, `/stage`, `/metrics`,
   * `/hash`, `/health` — handlers.rs:39-72, 404-492) as typed responses
@@ -38,10 +38,11 @@ object StatusApi {
   }
 
   def hash(session: GraftSession): HashResponse = {
-    val c = Canonical.fromGraph(session.graph)
     // Merkle root (SURVEY §4.3.6) — the same value the distributed backend
-    // computes executor-side; certificates bind it too
-    HashResponse(Canonical.checksum(c), Canonical.merkleStateHashHex(c))
+    // computes executor-side; certificates bind it too. Checksum and root
+    // fold from the incremental root's leaves
+    val r = InMemoryStateHash.rootWithStats(session.graph)
+    HashResponse(r.checksum, r.rootHex)
   }
 
   // --- distributed backend ---
@@ -90,5 +91,18 @@ object StatusApi {
     gauge("graft_density_millionths", "Integer fixed-point graph density", m.densityMillionths)
     gauge("graft_stage", "Maturity stage S0..S3", stage.order.toLong)
     sb.toString
+  }
+
+  /** Prometheus counters of the in-memory state hash: roots served and
+    * node chunks re-encoded for them, which shows how much each root
+    * reused.
+    */
+  def stateHashText(session: GraftSession): String = {
+    val h = InMemoryStateHash.of(session.graph)
+    def counter(name: String, help: String, value: Long): String =
+      s"# HELP $name $help\n# TYPE $name counter\n$name $value\n"
+    counter("graft_state_hash_roots_total", "State-hash roots served", h.roots.sum) +
+      counter("graft_state_hash_chunks_reencoded_total",
+        "Node row chunks re-encoded for state-hash roots", h.chunksReencoded.sum)
   }
 }

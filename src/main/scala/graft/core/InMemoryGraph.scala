@@ -27,6 +27,16 @@ trait GraphOps {
   def getProperties(node: Long): Either[GraftError, Vector[(String, String)]]
 }
 
+/** Node ids whose canonical rows changed, per section of the canonical
+  * form: the node row itself, the out-edges it is the source of, and its
+  * properties.
+  */
+final class GraphChanges {
+  val nodes: mutable.Set[Long] = mutable.Set.empty
+  val edgeSrcs: mutable.Set[Long] = mutable.Set.empty
+  val props: mutable.Set[Long] = mutable.Set.empty
+}
+
 /** Deterministic in-memory graph — ordered maps everywhere so iteration
   * order (and therefore every query answer) is reproducible, mirroring the
   * reference's BTreeMap law (graph.rs:317-338).
@@ -43,6 +53,10 @@ final class InMemoryGraph extends GraphOps {
   private val properties =
     mutable.TreeMap.empty[Long, mutable.TreeMap[String, mutable.ArrayBuffer[String]]]
   private var nextNodeId: Long = 0L
+  // node ids changed since the last takeChanges; off (null) until a state
+  // hash first asks, so a graph that is never hashed pays a null check
+  private var changes: GraphChanges = null
+  private var changesOwner: AnyRef = null
 
   private def saturatingInc(w: Long): Long =
     if (w == Long.MaxValue) w else w + 1
@@ -56,6 +70,7 @@ final class InMemoryGraph extends GraphOps {
       nextNodeId = if (nextNodeId == Long.MaxValue) nextNodeId else nextNodeId + 1
       nodes(id) = Node(id, entity)
       entityIndex(entity) = id
+      if (changes != null) changes.nodes += id
       id
     })
 
@@ -65,6 +80,7 @@ final class InMemoryGraph extends GraphOps {
   override def insertEdge(from: Long, to: Long, weight: Long): Unit =
     if (nodes.contains(from) && nodes.contains(to)) {
       edges.getOrElseUpdate(from, mutable.TreeMap.empty)(to) = weight
+      if (changes != null) changes.edgeSrcs += from
     }
 
   /** +1 saturating; creates at 1; silent no-op on missing endpoints
@@ -73,7 +89,9 @@ final class InMemoryGraph extends GraphOps {
   override def incrementEdge(from: Long, to: Long): Unit =
     if (nodes.contains(from) && nodes.contains(to)) {
       val targets = edges.getOrElseUpdate(from, mutable.TreeMap.empty)
-      targets(to) = saturatingInc(targets.getOrElse(to, 0L))
+      val old = targets.get(to)
+      targets(to) = saturatingInc(old.getOrElse(0L))
+      if (changes != null && !old.contains(Long.MaxValue)) changes.edgeSrcs += from
     }
 
   /** -1 floored at 0; errors if the edge is absent — asymmetric with
@@ -84,6 +102,7 @@ final class InMemoryGraph extends GraphOps {
       case None => Left(GraftError.EdgeNotFound(from, to))
       case Some(w) =>
         edges(from)(to) = math.max(0L, w - 1)
+        if (changes != null && w > 0) changes.edgeSrcs += from
         Right(())
     }
 
@@ -97,6 +116,9 @@ final class InMemoryGraph extends GraphOps {
     */
   override def neighbors(node: Long): Vector[(Long, Long)] =
     edges.get(node).map(_.toVector).getOrElse(Vector.empty)
+
+  def foreachNeighbor(node: Long)(f: (Long, Long) => Unit): Unit =
+    edges.get(node).foreach(_.foreachEntry(f))
 
   override def containsNode(id: Long): Boolean = nodes.contains(id)
   override def nodeCount: Int = nodes.size
@@ -120,7 +142,25 @@ final class InMemoryGraph extends GraphOps {
       nextNodeId = if (node.id == Long.MaxValue) node.id else node.id + 1
     entityIndex(node.entityId) = node.id
     nodes(node.id) = node
+    if (changes != null) changes.nodes += node.id
   }
+
+  /** Hand the node ids changed since `owner`'s previous call to `owner`
+    * and start a fresh record. None, with every node to be counted as
+    * changed, on the first call or when another owner took the last
+    * record. Mutators record nothing until the first call.
+    */
+  def takeChanges(owner: AnyRef): Option[GraphChanges] = {
+    val taken = if (owner eq changesOwner) Option(changes) else None
+    changesOwner = owner
+    changes = new GraphChanges
+    taken
+  }
+
+  /** What the next [[takeChanges]] would hand over; None while recording
+    * is off.
+    */
+  def pendingChanges: Option[GraphChanges] = Option(changes)
 
   /** Set semantics at the (attribute, value) level with a per-node cap of
     * 4096 distinct pairs; idempotent re-inserts bypass the cap because they
@@ -137,6 +177,7 @@ final class InMemoryGraph extends GraphOps {
     properties
       .getOrElseUpdate(node, mutable.TreeMap.empty)
       .getOrElseUpdate(attribute, mutable.ArrayBuffer.empty) += value
+    if (changes != null) changes.props += node
     Right(())
   }
 

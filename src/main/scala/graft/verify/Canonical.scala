@@ -91,6 +91,10 @@ object Canonical {
   private val propOrdering: Ordering[(Long, String, String)] =
     Ordering.Tuple3(Ordering.Long, utf8Ordering, utf8Ordering)
 
+  /** One node's (attribute, value) pairs in canonical order. */
+  val pairOrdering: Ordering[(String, String)] =
+    Ordering.Tuple2(utf8Ordering, utf8Ordering)
+
   def fromGraph(g: InMemoryGraph): CanonicalGraph =
     CanonicalGraph(
       g.currentNextNodeId,
@@ -115,19 +119,12 @@ object Canonical {
       .putLong(node).putInt(a.length).put(a).putInt(v.length).put(v).array()
   }
 
-  private def tagged(tag: Byte, row: Array[Byte]): Array[Byte] = {
-    val out = new Array[Byte](row.length + 1)
-    out(0) = tag
-    System.arraycopy(row, 0, out, 1, row.length)
-    out
-  }
-
   def nodeHash(id: Long, entity: Long): Long =
-    RowHash.fnv1a64(tagged(TagNode, nodeBytes(id, entity)))
+    RowHash.fnv1a64(TagNode, nodeBytes(id, entity))
   def edgeHash(from: Long, to: Long, weight: Long): Long =
-    RowHash.fnv1a64(tagged(TagEdge, edgeBytes(from, to, weight)))
+    RowHash.fnv1a64(TagEdge, edgeBytes(from, to, weight))
   def propHash(node: Long, attribute: String, value: String): Long =
-    RowHash.fnv1a64(tagged(TagProp, propBytes(node, attribute, value)))
+    RowHash.fnv1a64(TagProp, propBytes(node, attribute, value))
 
   /** Commutative whole-graph checksum (order-independent by XOR). */
   def checksum(c: CanonicalGraph): Long = {

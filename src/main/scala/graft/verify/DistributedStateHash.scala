@@ -96,10 +96,7 @@ object DistributedStateHash {
           // the commutative checksum's row hash is FNV-1a64 over the
           // TAGGED canonical bytes (Canonical.checksum / the bit_xor
           // aggregate of Fnv1a64Expr compute the identical value)
-          val tagged = new Array[Byte](bytes.length + 1)
-          tagged(0) = tag
-          System.arraycopy(bytes, 0, tagged, 1, bytes.length)
-          xor ^= RowHash.fnv1a64(tagged)
+          xor ^= RowHash.fnv1a64(tag, bytes)
           rows += 1L
         }
         close()
@@ -127,23 +124,35 @@ object DistributedStateHash {
   /** Assemble the root from per-section leaves — counts and checksum
     * come FROM the leaves (rows summed, block xors folded), so the whole
     * state hash is one scan per section, and the incremental path can
-    * assemble from cached leaves without touching the data at all.
+    * assemble from cached leaves without touching the data at all. The
+    * header's `next_node_id` is the caller's: the graph's counter, which
+    * only equals the node count when ids are dense.
     */
   private[verify] def assembleRoot(
-      nodeLeaves: Seq[Leaf], edgeLeaves: Seq[Leaf],
+      nextNodeId: Long, nodeLeaves: Seq[Leaf], edgeLeaves: Seq[Leaf],
       propLeaves: Seq[Leaf]): Array[Byte] = {
-    val checksum = (nodeLeaves.iterator ++ edgeLeaves.iterator ++
-      propLeaves.iterator).foldLeft(0L)(_ ^ _.xor)
+    val checksum = checksumOf(nodeLeaves, edgeLeaves, propLeaves)
     val nNodes = nodeLeaves.iterator.map(_.rows).sum
     val nEdges = edgeLeaves.iterator.map(_.rows).sum
     val nProps = propLeaves.iterator.map(_.rows).sum
     val md = MessageDigest.getInstance("SHA-256")
-    md.update(Canonical.headerBytes(nNodes, nNodes, nEdges, nProps, checksum))
+    md.update(Canonical.headerBytes(nextNodeId, nNodes, nEdges, nProps, checksum))
     nodeLeaves.foreach(l => md.update(l.digest))
     edgeLeaves.foreach(l => md.update(l.digest))
     propLeaves.foreach(l => md.update(l.digest))
     md.digest()
   }
+
+  /** The commutative checksum: every block's FNV xor folded. */
+  private[verify] def checksumOf(sections: Seq[Leaf]*): Long =
+    sections.iterator.flatten.foldLeft(0L)(_ ^ _.xor)
+
+  /** `next_node_id` of a lineage derived by [[graft.graph.GraphTables]]:
+    * its node ids are dense 0..n-1 by construction (a session ingest
+    * appends at the count), so the counter equals the node count.
+    */
+  private[verify] def denseNextNodeId(nodeLeaves: Seq[Leaf]): Long =
+    nodeLeaves.iterator.map(_.rows).sum
 
   /** (root, non-empty leaf blocks) — the leaf count is the certify
     * rehearsal's observable: driver ingress is fixed bytes per leaf,
@@ -160,7 +169,8 @@ object DistributedStateHash {
     val nodeLeaves = foldSection(g, Canonical.TagNode, span)
     val edgeLeaves = foldSection(g, Canonical.TagEdge, span)
     val propLeaves = foldSection(g, Canonical.TagProp, span)
-    (assembleRoot(nodeLeaves.toSeq, edgeLeaves.toSeq, propLeaves.toSeq),
+    (assembleRoot(denseNextNodeId(nodeLeaves.toSeq), nodeLeaves.toSeq,
+      edgeLeaves.toSeq, propLeaves.toSeq),
       (nodeLeaves.length + edgeLeaves.length + propLeaves.length).toLong)
   }
 
@@ -173,8 +183,8 @@ object DistributedStateHash {
     val n = foldSection(g, Canonical.TagNode, span).toSeq
     val e = foldSection(g, Canonical.TagEdge, span).toSeq
     val p = foldSection(g, Canonical.TagProp, span).toSeq
-    val checksum = (n.iterator ++ e.iterator ++ p.iterator).foldLeft(0L)(_ ^ _.xor)
-    (checksum, assembleRoot(n, e, p).map(b => f"$b%02x").mkString)
+    (checksumOf(n, e, p),
+      assembleRoot(denseNextNodeId(n), n, e, p).map(b => f"$b%02x").mkString)
   }
 
   def stateHashHex(g: GraphFrames): String =

@@ -25,6 +25,10 @@ import graft.graph.GraphFrames
   * [[DistributedStateHash.merkleStateHashWithStats]], whose golden
   * vectors pin the root value this class must reproduce).
   *
+  * The leaf cache and root assembly do not care where a leaf comes from:
+  * [[InMemoryStateHash]] drives the same cache with leaves folded from
+  * per-node row chunks of a driver-side graph.
+  *
   * Thread-safety: all entry points synchronize on this instance — the
   * session mutation path and a concurrent certify cannot interleave a
   * half-registered batch.
@@ -68,14 +72,24 @@ final class IncrementalMerkle(val span: Long = Canonical.MerkleBlockSpan) {
 
   def root(g: GraphFrames): Array[Byte] = rootWithStats(g).root
 
-  def rootWithStats(g: GraphFrames): Result = synchronized {
+  def rootWithStats(g: GraphFrames): Result =
+    refresh((tag, only) => DistributedStateHash.foldSection(g, tag, span, only).toSeq)(
+      DistributedStateHash.denseNextNodeId)
+
+  /** Refresh the dirty blocks (every block when cold) of each section
+    * through `fold`, which gets the section tag and the blocks to rebuild
+    * (None: all) and returns their non-empty leaves; then assemble the
+    * root with the header's `next_node_id` taken from the node leaves.
+    */
+  private[verify] def refresh(fold: (Byte, Option[Seq[Long]]) => Seq[Leaf])(
+      nextNodeId: Seq[Leaf] => Long): Result = synchronized {
     var recomputed = 0L
     Seq(Canonical.TagNode, Canonical.TagEdge, Canonical.TagProp).foreach { tag =>
       val only =
         if (cold) None
         else Some(dirty.iterator.collect { case (t, b) if t == tag => b }.toSeq)
       if (!only.exists(_.isEmpty)) { // cold, or some blocks dirty
-        val fresh = DistributedStateHash.foldSection(g, tag, span, only)
+        val fresh = fold(tag, only)
         only match {
           // a dirty block that emptied out (all rows gone) must LOSE its
           // leaf, so stale keys are dropped before fresh ones land
@@ -93,8 +107,7 @@ final class IncrementalMerkle(val span: Long = Canonical.MerkleBlockSpan) {
         .toSeq.sortBy(_.block)
     val (n, e, p) = (section(Canonical.TagNode), section(Canonical.TagEdge),
       section(Canonical.TagProp))
-    val checksum = (n.iterator ++ e.iterator ++ p.iterator).foldLeft(0L)(_ ^ _.xor)
-    Result(DistributedStateHash.assembleRoot(n, e, p), checksum,
-      recomputed, (n.size + e.size + p.size).toLong)
+    Result(DistributedStateHash.assembleRoot(nextNodeId(n), n, e, p),
+      DistributedStateHash.checksumOf(n, e, p), recomputed, (n.size + e.size + p.size).toLong)
   }
 }

@@ -11,8 +11,16 @@ object RowHash {
   final val FnvOffset = 0xcbf29ce484222325L
   final val FnvPrime = 0x100000001b3L
 
-  def fnv1a64(bytes: Array[Byte]): Long = {
-    var h = FnvOffset
+  def fnv1a64(bytes: Array[Byte]): Long = fold(FnvOffset, bytes)
+
+  /** FNV-1a 64 of `tag` followed by `bytes`: the hash of a tagged
+    * canonical row without copying it.
+    */
+  def fnv1a64(tag: Byte, bytes: Array[Byte]): Long =
+    fold((FnvOffset ^ (tag & 0xffL)) * FnvPrime, bytes)
+
+  private def fold(start: Long, bytes: Array[Byte]): Long = {
+    var h = start
     var i = 0
     while (i < bytes.length) {
       h ^= (bytes(i) & 0xffL)

@@ -125,6 +125,32 @@ class HttpFacadeSpec extends AnyFunSuite {
 
       // properties queries cannot be certified
       assert(post(c, s"$base/certify", """{"type": "properties", "node_id": 0}""").statusCode === 400)
+
+      // after more writes (a new entity, a duplicate, a supplementary-plane
+      // value, a repeated edge) the certificate and /hash both bind the
+      // state a replay of the same writes reaches
+      val writes = Seq(
+        Seq(Signal(1, "k", "a"), Signal(2, "k", "b")),
+        Seq(Signal(2, "k", "b"), Signal(3, "name", "\uD834\uDD1E clef"), Signal(1, "k", "c")),
+        Seq(Signal(1, "k", "a"), Signal(2, "k", "b")),
+        Seq(Signal(3, "name", "z"), Signal(1, "role", "x"), Signal(2, "k", "b"), Signal(3, "k", "b")))
+      writes.tail.foreach { w =>
+        val body = w.map(x => s"""{"entity_id": ${x.entityId}, "attribute": ${JsonCodec.jstr(x.attribute)}, """ +
+          s""""value": ${JsonCodec.jstr(x.value)}}""").mkString("""{"signals":[""", ",", "]}")
+        assert(post(c, s"$base/signals", body).statusCode === 200)
+      }
+      val replay = new GraftSession()
+      writes.foreach(w => assert(replay.ingestSequence(w).isRight))
+      val canonical = graft.verify.Canonical.fromGraph(replay.graph)
+      val want = graft.verify.Canonical.merkleStateHashHex(canonical)
+      val cert = graft.verify.QueryCertificate.fromCanonicalBytes(
+        Base64.getDecoder.decode(certOf(post(c, s"$base/certify", body).body))).toOption.get
+      assert(cert.stateHash.map(b => f"$b%02x").mkString === want)
+      val hash = get(c, s"$base/hash").body
+      assert(hash.contains(s""""state_hash":"$want"""") &&
+        hash.contains(s""""checksum":${graft.verify.Canonical.checksum(canonical)},"""))
+      // five roots served: four certificates and the /hash
+      assert(get(c, s"$base/metrics").body.contains("graft_state_hash_roots_total 5\n"))
     }
   }
 
