@@ -92,11 +92,24 @@ object GraphTables {
     cache.getOrElseUpdate((spark, dir), build(validSignals(signalsFromEvents(spark, dir))))
   }
 
-  /** Drop a cache entry and unpersist its tables. */
-  def invalidate(spark: SparkSession, dir: String): Unit =
+  /** Drop a dir's graph tables and every memo derived from them (the BFS
+    * closures keyed on its graph, the triangle table g21 keys on `dir`,
+    * the undirected snapshot g22 keys on `"$dir#und"`), releasing what
+    * each pinned.
+    */
+  def invalidate(spark: SparkSession, dir: String): Unit = {
     cache.remove((spark, dir)).foreach { g =>
       g.nodes.unpersist(); g.edges.unpersist(); g.properties.unpersist()
+      bfsClosureCache.filterInPlace { case ((s, gk, _, _, _), df) =>
+        if ((s eq spark) && (gk eq g)) { graft.SessionMemos.releaseCheckpoints(df); false }
+        else true
+      }
     }
+    triCache.remove((spark, dir)).foreach { df =>
+      df.unpersist(); graft.SessionMemos.releaseCheckpoints(df)
+    }
+    undCache.remove((spark, s"$dir#und")).foreach(graft.SessionMemos.releaseCheckpoints)
+  }
 
   // session-scoped eviction (r10 verdict #5): a stopping session (or an
   // explicit SessionMemos.evict) unpins every graph it built
@@ -110,13 +123,21 @@ object GraphTables {
       } else true
     }
     triCache.filterInPlace { case ((s, _), df) =>
-      if (dead(s)) { graft.SessionMemos.safeUnpersist(df); false } else true
+      if (dead(s)) {
+        graft.SessionMemos.safeUnpersist(df)
+        graft.SessionMemos.releaseCheckpoints(df) // triangleCounts' und/fwd cuts
+        false
+      } else true
+    }
+    undCache.filterInPlace { case ((s, _), df) =>
+      if (dead(s)) { graft.SessionMemos.releaseCheckpoints(df); false } else true
     }
   }
 
   private[graft] def memoEntriesFor(session: SparkSession): Int =
     cache.keysIterator.count(_._1 eq session) +
       triCache.keysIterator.count(_._1 eq session) +
+      undCache.keysIterator.count(_._1 eq session) +
       bfsClosureCache.keysIterator.count(_._1 eq session)
 
   /** Derive nodes / edges / properties from a validated signal log.
@@ -287,6 +308,9 @@ object GraphTables {
     // regression: solo median is back at r6's level.)
     val und = undirectedSimpleEdges(g).localCheckpoint()
     val fwd = forwardEdges(und).localCheckpoint()
+    // fwd is materialized and und has no other reader: free its blocks now
+    // rather than when the ContextCleaner gets to them
+    graft.SessionMemos.releaseCheckpoints(und)
     val e1 = fwd.select(col("lo").as("x"), col("hi").as("y"))
     val e2 = fwd.select(col("lo").as("y"), col("hi").as("z"))
     val e3 = fwd.select(col("lo").as("x"), col("hi").as("z"))
@@ -327,55 +351,41 @@ object GraphTables {
       case _ => triangleCounts(g)
     }
 
+  /** Memoized canonical undirected edge snapshot per (session, key) —
+    * g22 and g22b both read the identical
+    * `undirectedSimpleEdges(g).localCheckpoint()`, which would otherwise
+    * be re-derived on every pass (a measured 32-task ~0.3s stage per pass
+    * per entry at sf0.1). Released on eviction or [[invalidate]]; the
+    * checkpointed plan carries no lineage, so a later caller rebuilds it.
+    */
+  private val undCache = TrieMap.empty[(SparkSession, String), DataFrame]
+
   /** Common-neighbor similarity over the undirected simple graph: for
     * every node pair sharing at least one neighbor, the shared-neighbor
     * count and the neighbor-set Jaccard (integer millionths, floor).
     * The link-prediction companion to [[triangleCounts]].
     *
-    * Plan: adjacency wedge join (two scans of the symmetrized edge list
-    * equi-joined on the shared neighbor) + one aggregate on the pair key,
-    * then two broadcast-size degree joins. The wedge fan-out is Σ deg(w)²
-    * over shared neighbors w — inherently quadratic in hub degree (no
-    * orientation trick applies: BOTH endpoints of a wedge are outputs
-    * here, unlike triangles where the closing edge filters). At 100 TB
-    * the standard mitigation is capping or sampling hub neighborhoods
-    * (the d10b dfCap pattern); `hubCap` applies it — wedges through
-    * neighbors with degree > cap are excluded from COUNTING, which
-    * changes semantics (documented, like d10b's) and is therefore gated
-    * as its own entry when used.
+    * The work is Σ deg(w)² over shared neighbors w — inherently quadratic
+    * in hub degree (no orientation trick applies: BOTH endpoints of a
+    * wedge are outputs here, unlike triangles where the closing edge
+    * filters). At 100 TB the standard mitigation is capping hub
+    * neighborhoods (the d10b dfCap pattern); `hubCap` applies it — shared
+    * neighbors with degree > cap are excluded from COUNTING, which changes
+    * semantics (documented, like d10b's) and is therefore gated as its own
+    * entry when used. Jaccard always keeps the FULL degrees.
     *
     * A FIXED cap is fixture-relative: on a dense graph where every degree
     * exceeds it, the capped result is vacuously empty and the gate checks
-    * nothing (round-5 advice). `capAtMedianDegree` instead derives the cap
-    * from the data — the lower median of the degree distribution (the
-    * smallest degree value covering at least half the nodes), computed on
-    * the degree HISTOGRAM (one row per distinct degree value, ≤ max
-    * degree rows, so the cumulative window is over a tiny table — never a
-    * single-partition pass over |V|). Pure integer arithmetic
-    * (2·cum ≥ tot), so the oracle re-derives the identical cap; by
-    * construction roughly half the nodes stay sub-cap, so the capped
-    * entry is non-vacuous on ANY degree distribution.
+    * nothing. `capAtMedianDegree` instead derives the cap from the data —
+    * the lower median of the degree distribution (the smallest degree
+    * value covering at least half the nodes), computed in-plan on the
+    * degree HISTOGRAM (one row per distinct degree value, so the
+    * cumulative window is over a tiny table — never a single-partition
+    * pass over |V|). Pure integer arithmetic (2·cum ≥ tot), so the oracle
+    * re-derives the identical cap; by construction roughly half the nodes
+    * stay sub-cap, so the capped entry is non-vacuous on ANY degree
+    * distribution.
     */
-  /** Memoized canonical undirected edge snapshot per (session, key) —
-    * r18: g22 and g22b both re-derived and re-checkpointed the identical
-    * `undirectedSimpleEdges(g).localCheckpoint()` on every bench pass
-    * (a measured 32-task ~0.3s stage per pass per entry at sf0.1).
-    * Same lifecycle as [[triCache]]; the checkpointed plan carries no
-    * lineage, so eviction just unpersists.
-    */
-  private val undCache = TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[graft] def clearUndMemo(session: SparkSession): Unit =
-    undCache.filterInPlace { case ((s, _), df) =>
-      if (s eq session) { df.unpersist(blocking = true); false } else true
-    }
-
-  graft.SessionMemos.registerEvictor { dead =>
-    undCache.filterInPlace { case ((s, _), df) =>
-      if (dead(s)) { graft.SessionMemos.safeUnpersist(df); false } else true
-    }
-  }
-
   def commonNeighbors(
       g: GraphFrames,
       hubCap: Option[Long] = None,
@@ -397,6 +407,28 @@ object GraphTables {
     * edge list (u < v, no loops, no dups) — lets synthetic graphs (the
     * g22c/g22d power-law fixture) run the identical capped machinery
     * without routing through a signal-log-derived [[GraphFrames]].
+    *
+    * Plan: common neighbors are counted per LOW endpoint, never per
+    * wedge row.
+    *   1. The adjacency is shuffled by center and sorted by (center,
+    *      neighbor), so each center's neighbor list arrives as one sorted
+    *      run; its length is the degree, so the cap is `length ≤ cap` on
+    *      the run itself (no node-sized cap join).
+    *   2. One typed pass emits, for each member `a` of a sub-cap list,
+    *      the row (a, the members after a) — at most |adjacency| rows.
+    *   3. Those rows are shuffled by `a` and sorted within partitions; a
+    *      per-owner kernel counts equal `b`s across all of a's suffixes
+    *      (sort + run length over a primitive array) and emits
+    *      (a, b, common). Keying by the low endpoint makes every pair
+    *      a < b land at exactly one owner, so the count is final there —
+    *      no pair-keyed aggregate, no partial rows per pair. An owner's
+    *      memory is its wedge count Σ over centers of |suffix after a|,
+    *      which is ≤ deg(a)·cap on the capped path.
+    *   4. The degrees (an aggregate of the symmetric adjacency) join on
+    *      and give Jaccard.
+    * Both shuffles are REPARTITION_BY_NUM at defaultParallelism: their
+    * input is byte-tiny next to the suffix work it fans out to, and AQE
+    * would otherwise coalesce it into one task.
     */
   def commonNeighborsFromEdges(
       edges: DataFrame,
@@ -408,12 +440,16 @@ object GraphTables {
     // the data-derived cap could get a fixed one instead (round-6 advice)
     require(hubCap.isEmpty || !capAtMedianDegree,
       "pass either hubCap or capAtMedianDegree, not both")
-    val und = // consumed by adj (x2) and deg; false when already pinned
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val und = // read by the adjacency and degree scans; false if pinned
       if (checkpoint) edges.localCheckpoint() else edges
-    val adj = und.select(col("u").as("n"), col("v").as("m"))
+    val parts = spark.sparkContext.defaultParallelism
+    val sym = und.select(col("u").as("n"), col("v").as("m"))
       .union(und.select(col("v").as("n"), col("u").as("m")))
-    val deg = adj.groupBy(col("m").as("node")).agg(count(lit(1)).as("deg"))
-    val medianCap: Option[DataFrame] = if (capAtMedianDegree) {
+    val adj = sym.repartition(parts, col("n"))
+    val deg = sym.groupBy(col("n").as("node")).agg(count(lit(1)).as("deg"))
+    val capped = if (capAtMedianDegree) {
       import org.apache.spark.sql.expressions.Window
       val hist = deg.groupBy("deg").agg(count(lit(1)).as("c"))
       val cum = hist.select(
@@ -421,50 +457,74 @@ object GraphTables {
         sum("c").over(Window.orderBy("deg")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("cum"),
         sum("c").over(Window.partitionBy()).as("tot"))
-      Some(cum.filter(col("cum") * 2 >= col("tot")).agg(min(col("deg")).as("cap")))
-    } else None
-    // r18 (guide §2.2/§2.5): the wedge join's OUTPUT is Σ deg(n)² — far
-    // larger than its byte-tiny input — and AQE sizes stages on INPUT
-    // bytes, so at fixture scale the whole quadratic fan-out ran as ONE
-    // task (a measured 2.5s single-task stage inside g22b's 4.5s; the
-    // uncapped g22d serialized 8.4s the same way). Three deliberate
-    // moves, all scale-adaptive:
-    //   1. `adj` is hash-repartitioned on the wedge key to the cluster's
-    //      defaultParallelism BEFORE any cap filter — placed on the
-    //      union (whose partitioning is unknown) the REPARTITION_BY_NUM
-    //      exchange can neither be elided as redundant nor have its
-    //      read coalesced by AQE. (Placed on the capped wedge source it
-    //      WAS elided: the cap semi-join's output already carried the
-    //      deg aggregate's hash(n) partitioning, AQE-coalesced to one
-    //      partition — which is exactly the pathology.)
-    //   2. the cap side joins as an explicit broadcast (it is O(nodes)
-    //      rows of (node) after the filter), so the stream side keeps
-    //      move 1's partitioning.
-    //   3. the MERGE hint keeps AQE from rewriting the byte-tiny
-    //      self-join into a broadcast join whose stream is a handful of
-    //      local shuffle reads — sort-merge on the co-partitioned key
-    //      is also the only strategy that exists at 100 TB here.
-    val wedgeParts = edges.sparkSession.sparkContext.defaultParallelism
-    val adjP = adj.repartition(wedgeParts, col("n"))
-    val wedgeSrc = (hubCap, medianCap) match {
-      case (Some(cap), _) => adjP.join(broadcast(
-        deg.filter(col("deg") <= cap).select(col("node").as("n"))), Seq("n"))
-      case (None, Some(capDf)) =>
-        val cold = deg.crossJoin(broadcast(capDf)) // one-row cap
-          .filter(col("deg") <= col("cap")).select(col("node").as("n"))
-        adjP.join(broadcast(cold), Seq("n"))
-      case (None, None) => adjP
-    }
-    val wedgeIn = wedgeSrc.hint("MERGE")
-    val pairs = wedgeIn.as("x").join(wedgeIn.as("y"), Seq("n"))
-      .filter(col("x.m") < col("y.m"))
-      .groupBy(col("x.m").as("id_a"), col("y.m").as("id_b"))
-      .agg(count(lit(1)).as("common"))
+      val cap = cum.filter(col("cum") * 2 >= col("tot")).agg(min(col("deg")).as("cap"))
+      adj.crossJoin(broadcast(cap)) // one row; keeps adj's partitioning
+    } else adj.withColumn("cap", lit(hubCap.getOrElse(Long.MaxValue)))
+    val pairs = capped.sortWithinPartitions("n", "m")
+      .as[(Long, Long, Long)].mapPartitions(suffixRows)
+      .toDF("a", "bs")
+      .repartition(parts, col("a")).sortWithinPartitions("a")
+      .as[(Long, Array[Long])].mapPartitions(commonPerOwner)
+      .toDF("id_a", "id_b", "common")
     val da = deg.select(col("node").as("id_a"), col("deg").as("deg_a"))
     val db = deg.select(col("node").as("id_b"), col("deg").as("deg_b"))
     pairs.join(da, "id_a").join(db, "id_b")
       .select(col("id_a"), col("id_b"), col("common"),
         expr("common * 1000000 div (deg_a + deg_b - common)").as("jaccard_millionths"))
+  }
+
+  /** Step 2 of [[commonNeighborsFromEdges]]: over (center, neighbor, cap)
+    * rows sorted by (center, neighbor), each center whose list length is
+    * ≤ cap yields (a, the list after a) for every member a but the last.
+    * Buffers at most `cap` members of one list.
+    */
+  private def suffixRows(rows: Iterator[(Long, Long, Long)]): Iterator[(Long, Array[Long])] = {
+    val in = rows.buffered
+    var list = new Array[Long](64)
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val (n, _, cap) = in.head
+      var len = 0
+      while (in.hasNext && in.head._1 == n) {
+        val m = in.next()._2
+        if (len < cap) {
+          if (len == list.length) list = java.util.Arrays.copyOf(list, 2 * len)
+          list(len) = m
+        }
+        len += 1
+      }
+      if (len > cap) Iterator.empty
+      else Iterator.range(0, len - 1)
+        .map(i => (list(i), java.util.Arrays.copyOfRange(list, i + 1, len)))
+    }
+  }
+
+  /** Step 3 of [[commonNeighborsFromEdges]]: over (a, suffix) rows sorted
+    * by a, concatenate each owner's suffixes into one array, sort it and
+    * emit (a, b, run length) per distinct b. Every b > a, since suffixes
+    * come from ascending lists.
+    */
+  private def commonPerOwner(rows: Iterator[(Long, Array[Long])]): Iterator[(Long, Long, Long)] = {
+    val in = rows.buffered
+    var bs = new Array[Long](1024)
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val a = in.head._1
+      var w = 0
+      while (in.hasNext && in.head._1 == a) {
+        val s = in.next()._2
+        if (w + s.length > bs.length)
+          bs = java.util.Arrays.copyOf(bs, math.max(2 * bs.length, w + s.length))
+        System.arraycopy(s, 0, bs, w, s.length)
+        w += s.length
+      }
+      java.util.Arrays.sort(bs, 0, w)
+      var i = 0
+      Iterator.continually(()).takeWhile(_ => i < w).map { _ =>
+        val b = bs(i)
+        val start = i
+        while (i < w && bs(i) == b) i += 1
+        (a, b, (i - start).toLong)
+      }
+    }
   }
 
   /** PageRank in deterministic integer fixed-point (millionths): every

@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
   *      join's hottest key within its O(sqrt E) bound at 100x, and the
   *      full per-node triangle count actually runs there;
   *   2. the g22b median-degree hub cap is EFFECTIVE: wedge volume
-  *      (Σ C(deg,2) over wedge centers — the join's exact fan-out) drops
-  *      by a measured factor on the 100x graph, and by a much larger one
-  *      on a power-law synthetic where an uncapped run would be ~1e10
+  *      (Σ C(deg,2) over wedge centers — the common-neighbor kernel's
+  *      exact work) drops by a measured factor on the 100x graph, and by
+  *      a much larger one on a power-law synthetic where an uncapped
+  *      run would be ~1e10
   *      wedges (computed analytically from the degree histogram, never
   *      executed); the capped run executes and returns rows;
   *   3. integer PageRank's per-round cost stays linear: wall time at

@@ -33,9 +33,10 @@ class SessionMemosSpec extends AnyFunSuite {
     val s2 = spark.newSession()
     val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
     pairs(s2, 0.5)
-    graph.GraphTables.forDir(s2, dir)
+    graph.GraphTables.commonNeighbors(graph.GraphTables.forDir(s2, dir),
+      cacheKey = Some(s"$dir#und")).collect()
     assert(queries.AnnPack.memoEntriesFor(s2) > 0)
-    assert(graph.GraphTables.memoEntriesFor(s2) > 0)
+    assert(graph.GraphTables.memoEntriesFor(s2) === 2) // graph tables + undirected snapshot
     val pinned = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
     assert(pinned.nonEmpty)
 
@@ -54,6 +55,32 @@ class SessionMemosSpec extends AnyFunSuite {
     pairs(s2, 0.5)
     assert(queries.AnnPack.memoEntriesFor(s2) > 0)
     SessionMemos.evict(s2)
+  }
+
+  test("invalidate(dir) drops every memo keyed on that dir and releases what it pinned") {
+    val s5 = spark.newSession()
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    for (name <- Seq("g22_common_neighbors", "g21_triangle_counts"))
+      queries.GraphPack.defs.find(_.name == name).get.run(s5, dir).collect()
+    // graph tables, g22's undirected snapshot, g21's triangle table
+    assert(graph.GraphTables.memoEntriesFor(s5) === 3)
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
+    assert(pinned.nonEmpty)
+    // plus a BFS closure keyed on the dir's graph (its per-hop
+    // checkpoints are not memo-owned, so it stays out of `pinned`)
+    queries.GraphPack.defs.find(_.name == "g18b_traverse_dfs_validity").get.run(s5, dir).collect()
+    assert(graph.GraphTables.memoEntriesFor(s5) === 4)
+
+    graph.GraphTables.invalidate(s5, dir)
+
+    assert(graph.GraphTables.memoEntriesFor(s5) === 0)
+    val survivors = spark.sparkContext.getPersistentRDDs.keySet.intersect(pinned)
+    assert(survivors.isEmpty, s"RDDs still pinned after invalidate: " +
+      survivors.map(spark.sparkContext.getPersistentRDDs(_).toDebugString))
+    // and the dir serves again, from a fresh build
+    queries.GraphPack.defs.find(_.name == "g22_common_neighbors").get.run(s5, dir).collect()
+    assert(graph.GraphTables.memoEntriesFor(s5) === 2)
+    SessionMemos.evict(s5)
   }
 
   test("phrase-merge memo: one induction per (session, corpus, rounds); evictable") {

@@ -227,6 +227,15 @@ class GraphTablesSpec extends AnyFunSuite {
   }
 
   test("power-law fixture: heavy tail is real, median cap prunes >10x wedge volume") {
+    import java.util.concurrent.atomic.AtomicLong
+    import org.apache.spark.GraftTestListenerBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+
     // the g22c/g22d graph: chain + sqrt-attachment over N = 40·|V|. The
     // quantitative claim the gated pair rides on — hubs dominate the
     // uncapped wedge volume, the in-plan median cap removes them — is
@@ -257,6 +266,56 @@ class GraphTablesSpec extends AnyFunSuite {
     capped.foreach { case (k, c) =>
       assert(full.contains(k) && c <= full(k), s"pair $k capped=$c full=${full.get(k)}")
     }
+
+    // counting budget, uncapped: the pairs (~328k) outnumber the adjacency
+    // (~24k rows) more than tenfold, so a plan that writes a shuffle record
+    // per pair or per wedge breaks 3·|adj| + 2·|V|
+    val und = edges.localCheckpoint()
+    val adjRows = 2 * und.count()
+    val sc = spark.sparkContext
+    val records = new AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) records.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    GraftTestListenerBridge.waitUntilListenerBusEmpty(sc)
+    sc.addSparkListener(listener)
+    val pairs = try {
+      val rows = GraphTables.commonNeighborsFromEdges(und, checkpoint = false).collect().length
+      GraftTestListenerBridge.waitUntilListenerBusEmpty(sc)
+      rows
+    } finally sc.removeSparkListener(listener)
+    assert(pairs > 10 * adjRows, s"$pairs pairs: the fixture no longer tells per-pair work apart")
+    assert(records.get <= 3 * adjRows + 2 * n,
+      s"${records.get} shuffle records for |adj| = $adjRows, |V| = $n")
+
+    // the executed plan, with broadcast joins off as at scale
+    def flatten(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
+      case q: QueryStageExec => flatten(q.plan)
+      case _: ReusedExchangeExec => Nil
+      case _ => p.children.flatMap(flatten)
+    })
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try for (median <- Seq(false, true)) {
+      val df = GraphTables.commonNeighborsFromEdges(und, capAtMedianDegree = median,
+        checkpoint = false)
+      df.collect()
+      val plan = flatten(df.queryExecution.executedPlan)
+      def text = df.queryExecution.executedPlan.toString
+      val wedgeJoins = plan.collect {
+        case j: BaseJoinExec if Seq(j.left, j.right).forall(_.output.exists(_.name == "m")) => j
+      }
+      assert(wedgeJoins.isEmpty, s"a join with the adjacency on both sides:\n$text")
+      val pairAggs = plan.collect {
+        case a: BaseAggregateExec if a.groupingExpressions.size >= 2 => a
+      }
+      assert(pairAggs.isEmpty, s"an aggregate keyed on a pair:\n$text")
+      val broadcasts = plan.collect { case b: BroadcastExchangeLike => b.output.map(_.name) }
+      assert(broadcasts === (if (median) Seq(Seq("cap")) else Nil),
+        s"broadcasts other than the one-row cap:\n$text")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("random graphs: triangles, common neighbors and pageRank match sequential twins") {
@@ -266,8 +325,13 @@ class GraphTablesSpec extends AnyFunSuite {
     val genEdges: Gen[List[(Long, Long)]] = Gen.listOfN(60, for {
       s <- Gen.chooseNum(0L, 14L); d <- Gen.chooseNum(0L, 14L)
     } yield (s, d))
-    for (seed <- 0 until 4) {
-      val edgeList = genEdges.apply(Gen.Parameters.default, Seed(seed.toLong)).get.distinct
+    def gen(seed: Long) = genEdges.apply(Gen.Parameters.default, Seed(seed)).get.distinct
+    val cases = (0 until 4).map(seed => s"seed $seed" -> gen(seed.toLong)) ++ Seq(
+      "seed 4, node 14 isolated" -> gen(4L).filter { case (s, d) => s != 14L && d != 14L },
+      // circulant C15(1, 5): every degree is 4, so the median cap equals
+      // every degree and hubCap 4 sits exactly on the `<=` boundary
+      "4-regular" -> (0L to 14L).toList.flatMap(i => List((i, (i + 1) % 15), (i, (i + 5) % 15))))
+    for ((label, edgeList) <- cases) {
       val nodes = (0L to 14L).toDF("node_id").withColumn("entity_id", col("node_id"))
       val edges = edgeList.toDF("src", "dst").withColumn("weight", lit(1L))
       val g = GraphFrames(spark.emptyDataFrame, nodes, edges, spark.emptyDataFrame)
@@ -284,16 +348,28 @@ class GraphTablesSpec extends AnyFunSuite {
         v -> und.toSeq.count { case (a, b) =>
           a != v && b != v && nbr(v).contains(a) && nbr(v).contains(b) }.toLong
       }.toMap
-      assert(tri === triExp, s"seed $seed triangles")
+      assert(tri === triExp, s"$label triangles")
 
-      val cn = GraphTables.commonNeighbors(g)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
-      val cnExp = (for {
+      // capped or not, common counts only the kept shared neighbors while
+      // Jaccard keeps the full degrees
+      def cnExp(kept: Long => Boolean) = (for {
         a <- 0L to 14L; b <- a + 1 to 14L
-        common = (nbr(a).toSet & nbr(b).toSet).size if common > 0
+        common = (nbr(a).toSet & nbr(b).toSet).count(kept) if common > 0
       } yield (a, b) -> ((common.toLong,
         common.toLong * 1000000L / (nbr(a).size + nbr(b).size - common)))).toMap
-      assert(cn === cnExp, s"seed $seed common neighbors")
+      def cnOf(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
+      assert(cnOf(GraphTables.commonNeighbors(g)) === cnExp(_ => true),
+        s"$label common neighbors")
+      for (cap <- Seq(4L, 7L))
+        assert(cnOf(GraphTables.commonNeighbors(g, hubCap = Some(cap))) ===
+          cnExp(w => nbr(w).size <= cap), s"$label common neighbors, hubCap $cap")
+      // lower median over the nodes that have a neighbor (the degree
+      // table holds no isolated node)
+      val degs = nbr.values.map(_.size.toLong).filter(_ > 0).toSeq.sorted
+      val median = degs.find(d => 2 * degs.count(_ <= d) >= degs.size).get
+      assert(cnOf(GraphTables.commonNeighbors(g, capAtMedianDegree = true)) ===
+        cnExp(w => nbr(w).size <= median), s"$label common neighbors, median cap $median")
 
       val pr = GraphTables.pageRank(g, iterations = 3)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -306,7 +382,7 @@ class GraphTablesSpec extends AnyFunSuite {
         prSeq = (0L to 14L).map(v =>
           v -> (base * 15 / 100 + 85 * contrib.getOrElse(v, 0L) / 100)).toMap
       }
-      assert(pr === prSeq, s"seed $seed pageRank")
+      assert(pr === prSeq, s"$label pageRank")
     }
   }
 
