@@ -1,11 +1,16 @@
 package graft
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{expr, struct, xxhash64}
+import scala.collection.concurrent.TrieMap
 
 /** Benchmark main. Prints ONE JSON line:
   * `{"metric":"total","value":N,"unit":"sec","sf":...,"tier":...,
-  *   "skipped":[...],"errors":{},"flaky":{},"spread":{...},"queries":{...}}`.
+  *   "skipped":[...],"errors":{},"flaky":{},"spread":{...},"jobs":{...},
+  *   "queries":{...}}`, where `jobs` is each entry's median count of
+  * Spark jobs per timed pass (build and action together).
   *
   * Harness rules (VERDICT r01 "What's wrong" #2/#3, r03 bench hygiene):
   *   - deterministic query order (sorted by name) so run-to-run and
@@ -26,6 +31,30 @@ import org.apache.spark.sql.functions.{expr, struct, xxhash64}
   *     failures land in `flaky` with the pass count.
   */
 object Bench {
+  /** Local property naming the (entry, pass) a job belongs to. */
+  private val RunKey = "graft.bench.run"
+
+  /** Jobs started per [[RunKey]] value, one map per context. */
+  private val jobCounts = TrieMap.empty[String, TrieMap[String, Int]]
+
+  /** Idempotently install the job-counting listener on `sc` (keyed by
+    * appId, as [[SessionMemos.arm]] does) and return its counts. Jobs
+    * carry the submitting thread's local properties, so a job lands on
+    * the run that started it even when the asynchronous bus delivers
+    * the event later.
+    */
+  private def jobsByRun(sc: SparkContext): TrieMap[String, Int] =
+    jobCounts.getOrElseUpdate(sc.applicationId, {
+      val counts = TrieMap.empty[String, Int]
+      sc.addSparkListener(new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          Option(j.properties).flatMap(p => Option(p.getProperty(RunKey))).foreach { run =>
+            counts.update(run, counts.getOrElse(run, 0) + 1)
+          }
+      })
+      counts
+    })
+
   private def force(df: DataFrame): Unit = {
     val cols = df.columns.map(df.col)
     if (cols.isEmpty) { df.count(); () }
@@ -95,11 +124,14 @@ object Bench {
     }
 
     var failures = Map.empty[String, String]
+    val sc = spark.sparkContext
+    val jobs = jobsByRun(sc)
     // (name, seconds, succeeded): a failed pass's fast-fail duration must
     // not enter the median — mixing a 0.1s exception with 5s successes
     // reports a bogus 0.1s for a query that also shows as errored
-    val samples = (1 to Passes).flatMap { _ =>
+    val samples = (1 to Passes).flatMap { pass =>
       ordered.map { case (name, fn) =>
+        sc.setLocalProperty(RunKey, s"$name#$pass")
         val t0 = System.nanoTime()
         val ok =
           try { force(fn(spark, sfDir)); true }
@@ -107,8 +139,16 @@ object Bench {
             failures += name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
             false
           }
+        finally sc.setLocalProperty(RunKey, null)
         (name, (System.nanoTime() - t0) / 1e9, ok)
       }
+    }
+    // per-entry median job count over the timed passes, read once the
+    // bus has delivered every job-start event
+    org.apache.spark.GraftListenerBridge.waitUntilListenerBusEmpty(sc)
+    val jobMedians = ordered.map { case (name, _) =>
+      val n = (1 to Passes).map(p => jobs.getOrElse(s"$name#$p", 0)).sorted
+      name -> n(n.length / 2)
     }
     // a query is an error only when NO pass succeeded; intermittent
     // failures stay loud in a separate `flaky` map so a
@@ -149,6 +189,8 @@ object Bench {
         case c => c.toString
       } + "\""
     val qs = results.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+    val js = jobMedians.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+    val jobsTotal = jobMedians.map(_._2).sum
     val sp = spreads.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
     val errs = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
     val flk = flaky.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
@@ -158,7 +200,7 @@ object Bench {
     // of the stream, and r6's artifact lost the medians because `queries`
     // led the line — the per-entry medians now close the object so a
     // truncated capture still ends with them (verdict r6 #3/#4)
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","tier":${jstr(tier)},"skipped":$skp,"errors":$errs,"flaky":$flk,"spread":$sp,"queries":$qs}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","tier":${jstr(tier)},"skipped":$skp,"errors":$errs,"flaky":$flk,"spread":$sp,"jobs":$js,"queries":$qs}"""
     println(line)
     // stdout is a lossy channel (the driver keeps only the tail of the
     // stream — r7's artifact lost ~27 medians to the front clip), so the
@@ -189,7 +231,7 @@ object Bench {
     // artifact written above.
     spark.sparkContext.setLogLevel("ERROR")
     spark.stop()
-    val summary = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n":${results.size},"errors":${errors.size},"artifact":${jstr(outPath)}}"""
+    val summary = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n":${results.size},"errors":${errors.size},"jobs_total":$jobsTotal,"artifact":${jstr(outPath)}}"""
     println(summary)
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+import scala.collection.concurrent.TrieMap
 
 /** Loaders for the driver-generated testdata tables (repo:TESTDATA.md).
   *
@@ -8,14 +10,64 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (orders/lineitem by date, events by hour) — the loaders keep the read
   * declarative so Catalyst's partition pruning + filter pushdown apply
   * unchanged when the path points at a partitioned layout.
+  *
+  * Every input table is read through [[read]], which infers a path's
+  * schema once per file fingerprint. A bare `spark.read.parquet(path)`
+  * runs one Spark job to read the footers on every call, before the
+  * caller's own action; with the schema passed in, the read starts no
+  * job. The rule:
+  *   - the memo keeps one inferred schema per (session, path), next to
+  *     the path's [[graft.sources.VersionedIndex.dirFingerprint]] at
+  *     inference time (by default file names, sizes and mtimes from a
+  *     file-system walk — a stat, never a job);
+  *   - a read whose fingerprint equals the stored one passes the stored
+  *     schema; a miss or a changed fingerprint infers again and replaces
+  *     the entry;
+  *   - an `absent` fingerprint is never memoized: the path is missing,
+  *     or the provider cannot see it (an object-store path the default
+  *     `MtimeWalkSnapshot` cannot walk), so every such read infers.
+  * The fingerprint is taken BEFORE inference, so a rewrite racing the
+  * inference leaves an entry whose fingerprint no longer matches and the
+  * next read infers again. Limit: a rewrite that keeps every file's name,
+  * length and mtime (to the millisecond) is not seen, and the old schema
+  * is served for it.
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** (session, path) → (fingerprint, inferred schema); see [[read]]. */
+  private val schemas = TrieMap.empty[(SparkSession, String), (String, StructType)]
+
+  SessionMemos.registerEvictor { dead =>
+    schemas.filterInPlace { case ((s, _), _) => !dead(s) }
+  }
+
+  /** Read one Parquet input table, inferring its schema only when the
+    * path's fingerprint changed since the last read in this session (see
+    * the object doc). The memo stores the inferred schema unchanged, so
+    * a hit reads exactly the types an inference would produce.
+    */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val fp = graft.sources.VersionedIndex.dirFingerprint(path)
+    schemas.get((spark, path)) match {
+      case Some((`fp`, schema)) => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        if (fp != "absent") {
+          SessionMemos.arm(spark)
+          schemas.put((spark, path), (fp, df.schema))
+        }
+        df
+    }
+  }
+
+  private[graft] def memoEntriesFor(session: SparkSession): Int =
+    schemas.keysIterator.count(_._1 eq session)
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

@@ -74,7 +74,7 @@ object GraphTables {
     * parquet scan prunes the rest (incl. the nanos timestamp).
     */
   def signalsFromEvents(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/events.parquet")
+    graft.Tables.read(spark, s"$dir/events.parquet")
       .select(
         col("event_id").as("seq"),
         col("user_id").as("entity_id"),
@@ -83,12 +83,23 @@ object GraphTables {
 
   private val cache = TrieMap.empty[(SparkSession, String), GraphFrames]
 
+  /** The `events.parquet` fingerprint each (session, dir)'s graph memos
+    * were built from.
+    */
+  private val eventsFpPins = TrieMap.empty[(SparkSession, String), String]
+
   /** Build (or fetch cached) graph tables for a testdata dir. The cache is
     * per-(session, dir); entries pin persisted tables until
     * [[invalidate]] — callers that churn through many dirs own eviction.
+    * Each call pins the fingerprint of the dir's `events.parquet`; when it
+    * changed since the last call (a regenerated event log), the dir is
+    * [[invalidate]]d first, so the graph and everything derived from it
+    * rebuild from the current rows.
     */
   def forDir(spark: SparkSession, dir: String): GraphFrames = {
     graft.SessionMemos.arm(spark)
+    val fp = graft.sources.VersionedIndex.dirFingerprint(s"$dir/events.parquet")
+    if (eventsFpPins.put((spark, dir), fp).exists(_ != fp)) invalidate(spark, dir)
     cache.getOrElseUpdate((spark, dir), build(validSignals(signalsFromEvents(spark, dir))))
   }
 
@@ -114,6 +125,7 @@ object GraphTables {
   // session-scoped eviction (r10 verdict #5): a stopping session (or an
   // explicit SessionMemos.evict) unpins every graph it built
   graft.SessionMemos.registerEvictor { dead =>
+    eventsFpPins.filterInPlace { case ((s, _), _) => !dead(s) }
     cache.filterInPlace { case ((s, _), g) =>
       if (dead(s)) {
         graft.SessionMemos.safeUnpersist(g.nodes)

@@ -2004,7 +2004,7 @@ object AnnPack {
       numCells: Option[Int] = None,
       cacheKey: Option[String] = None): DataFrame = {
     // Adaptive plan choice (r8 verdict #6): an explicit numCells pins the
-    // blocked plan (tests, AnnCellProbe); otherwise the sizing probe also
+    // blocked plan (tests); otherwise the sizing probe also
     // decides WHETHER to block. On a corpus whose sampled geometry prunes
     // nothing, every exact method degenerates to all pairs, and the
     // broadcast scan is the cheapest such plan — the blocked machinery

@@ -261,7 +261,7 @@ object ExtensionsPack {
       import s.implicits._
       import graft.streaming.StreamingDedup
       val docs = Tables.documents(s, dir)
-      val sigs = PipelinePack.bandSignaturesMemo(docs, Some(s"$dir/documents"))
+      val sigs = PipelinePack.bandSignaturesMemo(docs, Some(PipelinePack.documentsKey(s, dir)))
         .select(col("doc_id").as("docId"), col("band").cast("int").as("band"),
           col("sig"))
         .as[StreamingDedup.BandSig]
@@ -308,7 +308,7 @@ object ExtensionsPack {
       import s.implicits._
       import graft.streaming.StreamingDedup
       val docs = Tables.documents(s, dir)
-      val sigs = PipelinePack.bandSignaturesMemo(docs, Some(s"$dir/documents"))
+      val sigs = PipelinePack.bandSignaturesMemo(docs, Some(PipelinePack.documentsKey(s, dir)))
         .select(col("doc_id").as("docId"), col("band").cast("int").as("band"),
           col("sig"), timestamp_seconds(col("doc_id")).as("ts"))
         .as[StreamingDedup.BandSigTs]

@@ -750,9 +750,8 @@ object PipelinePack {
     // per (session, corpus) under the standard evictor discipline (the
     // d22 bloom-bytes / recall-floor ground-truth pattern); the DELTA's
     // gram explode and the containment semi-join stay fresh per pass.
-    SessionMemos.arm(spark)
     val evalG = evalGramsCache.getOrElseUpdate(
-      (spark, s"$dir/documents#evalgrams5/m$deltaMod/e$evalRes"),
+      (spark, documentsKey(spark, dir) + s"#evalgrams5/m$deltaMod/e$evalRes"),
       grams(docs.filter(isEval), 5)
         .select(xxhash64(col("g")).as("g")).distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -876,28 +875,59 @@ object PipelinePack {
   private val evalGramsCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
-  // session-scoped eviction (r10 verdict #5); registered at object init,
-  // strictly before the cache can be populated
-  SessionMemos.registerEvictor { dead =>
-    maxDfCache.filterInPlace { case ((s, _), _) => !dead(s) }
-    bloomBytesCache.filterInPlace { case ((s, _), _) => !dead(s) }
-    evalGramsCache.filterInPlace { case ((s, _), df) =>
-      if (dead(s)) { SessionMemos.safeUnpersist(df); false } else true
+  /** The `documents.parquet` fingerprint each (session, dir)'s
+    * `"$dir/documents"`-keyed memos were built from.
+    */
+  private val documentsFpPins =
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+
+  /** The memo key of `dir`'s documents corpus: `"$dir/documents"`, to
+    * which callers append their own suffix after `#`. Each call pins the
+    * corpus fingerprint, the [[AnnPack.invalidateStaleCorpusMemos]]
+    * discipline: when `documents.parquet` changed since the last call in
+    * this session, every memo of this pack keyed under the corpus is
+    * dropped first, releasing what it persisted or checkpointed, so the
+    * caller rebuilds it from the current rows.
+    */
+  private[graft] def documentsKey(spark: SparkSession, dir: String): String = {
+    val key = s"$dir/documents"
+    val fp = graft.sources.VersionedIndex.dirFingerprint(s"$dir/documents.parquet")
+    SessionMemos.arm(spark)
+    if (documentsFpPins.put((spark, dir), fp).exists(_ != fp))
+      evictWhere((s, k) => (s eq spark) && (k == key || k.startsWith(s"$key#")))
+    key
+  }
+
+  /** Drop every memo entry whose (session, key) matches, releasing the
+    * persisted blocks and checkpoints it pinned.
+    */
+  private def evictWhere(hit: (SparkSession, String) => Boolean): Unit = {
+    maxDfCache.filterInPlace { case ((s, k), _) => !hit(s, k) }
+    bloomBytesCache.filterInPlace { case ((s, k), _) => !hit(s, k) }
+    evalGramsCache.filterInPlace { case ((s, k), df) =>
+      if (hit(s, k)) { SessionMemos.safeUnpersist(df); false } else true
     }
-    minDfCache.filterInPlace { case ((s, _, _), _) => !dead(s) }
-    bandSigCache.filterInPlace { case ((s, _), df) =>
-      if (dead(s)) { SessionMemos.safeUnpersist(df); false } else true
+    minDfCache.filterInPlace { case ((s, k, _), _) => !hit(s, k) }
+    bandSigCache.filterInPlace { case ((s, k), df) =>
+      if (hit(s, k)) { SessionMemos.safeUnpersist(df); false } else true
     }
-    jacPairsCache.filterInPlace { case ((s, _, _, _), df) =>
-      if (dead(s)) { SessionMemos.safeUnpersist(df); false } else true
+    jacPairsCache.filterInPlace { case ((s, k, _, _), df) =>
+      if (hit(s, k)) { SessionMemos.safeUnpersist(df); false } else true
     }
-    phraseMergeCache.filterInPlace { case ((s, _, _), (a, b)) =>
-      if (dead(s)) {
+    phraseMergeCache.filterInPlace { case ((s, k, _), (a, b)) =>
+      if (hit(s, k)) {
         SessionMemos.safeUnpersist(a); SessionMemos.safeUnpersist(b)
         SessionMemos.releaseCheckpoints(a); SessionMemos.releaseCheckpoints(b)
         false
       } else true
     }
+  }
+
+  // session-scoped eviction (r10 verdict #5); registered at object init,
+  // strictly before the cache can be populated
+  SessionMemos.registerEvictor { dead =>
+    documentsFpPins.filterInPlace { case ((s, _), _) => !dead(s) }
+    evictWhere((s, _) => dead(s))
   }
 
   private[graft] def memoEntriesFor(session: SparkSession): Int =
@@ -1947,7 +1977,7 @@ object PipelinePack {
       WHERE CAST(p.inter AS DOUBLE) / (sa.n + sb.n - p.inter) >= 0.5
       ORDER BY doc_i, doc_j""")) { (s, dir) =>
       nearDupPairs(Tables.documents(s, dir),
-        cacheKey = Some(s"$dir/documents")).orderBy("doc_i", "doc_j")
+        cacheKey = Some(documentsKey(s, dir))).orderBy("doc_i", "doc_j")
     },
 
     // ---- near-dup: exact n-gram Jaccard via the shingle inverted index
@@ -2010,7 +2040,7 @@ object PipelinePack {
       WHERE CAST(p.inter AS DOUBLE) / (sa.n + sb.n - p.inter) >= 0.3
       ORDER BY doc_i, doc_j""")) { (s, dir) =>
       ngramJaccardPairs(Tables.documents(s, dir), threshold = 0.3, dfCap = Some(5L),
-        capEngageFactor = Some(10L), cacheKey = Some(s"$dir/documents"))
+        capEngageFactor = Some(10L), cacheKey = Some(documentsKey(s, dir)))
         .orderBy("doc_i", "doc_j")
     },
 
@@ -2105,7 +2135,7 @@ object PipelinePack {
       SELECT id AS doc_id, min(r) AS cluster_id FROM reach
       GROUP BY id ORDER BY doc_id""")) { (s, dir) =>
       nearDupClusters(Tables.documents(s, dir), threshold = 0.3,
-        cacheKey = Some(s"$dir/documents")).orderBy("doc_id")
+        cacheKey = Some(documentsKey(s, dir))).orderBy("doc_id")
     },
 
     // ---- d25: the dedup DECISION — which doc each cluster keeps. d13
@@ -2151,7 +2181,7 @@ object PipelinePack {
              CAST(CASE WHEN rn = 1 THEN 1 ELSE 0 END AS BIGINT) AS kept
       FROM rk ORDER BY doc_id""")) { (s, dir) =>
       dedupKeepBest(Tables.documents(s, dir), threshold = 0.3,
-        cacheKey = Some(s"$dir/documents")).orderBy("doc_id")
+        cacheKey = Some(documentsKey(s, dir))).orderBy("doc_id")
     },
 
     // ---- d28: the CURATION MANIFEST — the end-to-end decision a
@@ -2225,7 +2255,7 @@ object PipelinePack {
         .cast("long")
       val split = docs.select(col("doc_id"),
         when(b < 204, "train").when(b < 230, "val").otherwise("test").as("split"))
-      dedupKeepBest(docs, threshold = 0.3, cacheKey = Some(s"$dir/documents"))
+      dedupKeepBest(docs, threshold = 0.3, cacheKey = Some(documentsKey(s, dir)))
         .join(lang, "doc_id")
         .join(docQuality(docs).select(col("doc_id"), col("qm")), "doc_id")
         .join(split, "doc_id")
@@ -2675,7 +2705,7 @@ object PipelinePack {
              CAST(0 AS BIGINT) AS missed,
              CAST(0 AS BIGINT) AS fp_bound_exceeded""")) { (s, dir) =>
       bloomDecontaminationReport(Tables.documents(s, dir),
-        cacheKey = Some(s"$dir/documents"))
+        cacheKey = Some(documentsKey(s, dir)))
     },
 
     // ---- d23: top distinguishing terms per document — the tf-idf-style
@@ -2805,7 +2835,7 @@ object PipelinePack {
              array_to_string(toks, ' ') AS merged_text
       FROM tk3 ORDER BY doc_id""")) { (s, dir) =>
       phraseMergeMemo(Tables.documents(s, dir), rounds = 3,
-          cacheKey = Some(s"$dir/documents"))._1
+          cacheKey = Some(documentsKey(s, dir)))._1
         .select(col("doc_id"), size(col("toks")).cast("long").as("n_tokens"),
           concat_ws(" ", col("toks")).as("merged_text"))
         .orderBy("doc_id")
@@ -2822,7 +2852,7 @@ object PipelinePack {
       UNION ALL SELECT CAST(3 AS BIGINT), wl, wr, CAST(c AS BIGINT) FROM w3
       ORDER BY round""")) { (s, dir) =>
       phraseMergeMemo(Tables.documents(s, dir), rounds = 3,
-          cacheKey = Some(s"$dir/documents"))._2
+          cacheKey = Some(documentsKey(s, dir)))._2
         .select(col("round"), col("l"), col("r"), col("c"))
         .orderBy("round")
     },
@@ -2846,7 +2876,7 @@ object PipelinePack {
       ORDER BY t0.doc_id""")) { (s, dir) =>
       val docs = Tables.documents(s, dir)
       val table = phraseMergeMemo(docs, rounds = 3,
-        cacheKey = Some(s"$dir/documents"))._2
+        cacheKey = Some(documentsKey(s, dir)))._2
       applyMergeTable(docs, table).orderBy("doc_id")
     },
 
@@ -2910,7 +2940,7 @@ object PipelinePack {
         LEFT JOIN dec ON dec.doc_id = dd.doc_id
       ORDER BY dd.doc_id""")) { (s, dir) =>
       incrementalIngestDedup(Tables.documents(s, dir),
-        cacheKey = Some(s"$dir/documents")).orderBy("doc_id")
+        cacheKey = Some(documentsKey(s, dir))).orderBy("doc_id")
     },
 
     // ---- d36: d32 served from the PERSISTED signature index — the
@@ -3187,7 +3217,7 @@ object PipelinePack {
           concat(col("text"), lit(" xq"), col("doc_id").cast("string")))
           .otherwise(col("text")))
       tokenQualityClassifier(aug,
-        minDf = chooseMinDf(aug, cacheKey = Some(s"$dir/documents#d35aug")))
+        minDf = chooseMinDf(aug, cacheKey = Some(documentsKey(s, dir) + "#d35aug")))
         .orderBy("doc_id")
     },
 

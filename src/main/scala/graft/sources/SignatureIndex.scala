@@ -70,6 +70,13 @@ object SignatureIndex {
     */
   private val Tables = Seq("", "_stats", "_plain")
 
+  /** The schemas segments are written with (the casts in [[writeSegment]]
+    * and the plain-delta leg of `append`): serve-path reads pass them, so
+    * a warm serve infers nothing from the files.
+    */
+  private val SigSchema = "doc_id BIGINT, band INT, sig BIGINT"
+  private val StatsSchema = "source STRING, n BIGINT"
+
   /** Row ceiling under which a delta's signatures are written PLAIN
     * (r16 verdict #1 — the [[AnnIndex.PlainDeltaMaxRows]] move for the
     * signature leg): 256k (doc_id, band, sig) rows ≈ 6 MB on disk,
@@ -298,16 +305,16 @@ object SignatureIndex {
     // concurrently published newer version's
     val meta = VersionedIndex.readMetaAt(path, v)
     val bucketed = VersionedIndex.serveBucketed(spark, "sig_idx", path, v,
-      "doc_id BIGINT, band INT, sig BIGINT",
+      SigSchema,
       Seq("band", "sig"), Seq("band", "sig"), meta.buckets, s"$path/$v")
     val plain = VersionedIndex.readFiles(path, v) match {
       case Some(listing) =>
         val fs = listing.filter(_.startsWith("_plain/")).map(f => s"$path/$v/$f")
-        if (fs.nonEmpty) Some(spark.read.parquet(fs: _*)) else None
+        if (fs.nonEmpty) Some(spark.read.schema(SigSchema).parquet(fs: _*)) else None
       case None =>
         val d = Paths.get(path, v, "_plain")
         if (Files.isDirectory(d) && VersionedIndex.dataFiles(d).nonEmpty)
-          Some(spark.read.parquet(d.toString))
+          Some(spark.read.schema(SigSchema).parquet(d.toString))
         else None
     }
     ServedSig(bucketed, plain)
@@ -337,7 +344,7 @@ object SignatureIndex {
     // recursive LOCATION listing; reading it explicitly is supported
     // (DataSource warns "all paths were ignored" but proceeds with the
     // given root — the leaf part-files have normal names)
-    spark.read.parquet(statsDir.toString)
+    spark.read.schema(StatsSchema).parquet(statsDir.toString)
       .groupBy(col("source")).agg(sum(col("n")).as("n"))
   }
 

@@ -547,7 +547,7 @@ object StreamingScaleRehearsal {
         val soakIn = s"$soakWork/in"
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(soakIn))
         val soakChunks = 12
-        val docsAll = spark.read.parquet(s"$srcDir/documents.parquet")
+        val docsAll = Tables.documents(spark, srcDir)
           .select(col("doc_id"), col("text"), col("source"))
         // base = residue 0 of 1+soakChunks; chunk i streams residue i+1
         val mod = (soakChunks + 1).toLong

@@ -1,0 +1,88 @@
+package graft
+
+import java.nio.file.{Files, Path, StandardCopyOption}
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The dir-keyed memos (the graph tables behind g22, d22's Bloom bytes,
+  * d37's eval-gram table) pin their input's file fingerprint: a table
+  * rewritten mid-session is never served from the memo built on the old
+  * rows.
+  */
+class MemoFingerprintSpec extends AnyFunSuite {
+  private val spark = SparkTestSession.spark
+  private val src = java.nio.file.Paths.get(TestData.dir("sf0.001"))
+  private val entries =
+    Seq("g22_common_neighbors", "d22_bloom_decontamination", "d37_incremental_manifest")
+
+  private def delete(p: Path): Unit = if (Files.exists(p)) {
+    val walk = Files.walk(p)
+    try walk.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
+    finally walk.close()
+  }
+
+  private def copyTree(from: Path, to: Path): Unit = {
+    val walk = Files.walk(from)
+    try walk.forEach { f =>
+      val t = to.resolve(from.relativize(f).toString)
+      if (Files.isDirectory(f)) Files.createDirectories(t)
+      else Files.copy(f, t, StandardCopyOption.COPY_ATTRIBUTES)
+      t.toFile.setWritable(true)
+    } finally walk.close()
+  }
+
+  private def run(s: org.apache.spark.sql.SparkSession, dir: Path): Map[String, Seq[String]] =
+    entries.map(e => e -> SparkEntry.queries(e)(s, dir.toString).collect().map(_.toString).toSeq.sorted).toMap
+
+  test("g22, d22 and d37 rebuild their memos and follow rewritten events and documents") {
+    val tmp = Files.createTempDirectory("graft-memo-fp")
+    val fresh = Files.createTempDirectory("graft-memo-fp-ref")
+    val s = spark.newSession()
+    val ref = spark.newSession()
+    def indexDirs = Seq(tmp, fresh).map(_.toString.replaceAll("[^A-Za-z0-9._-]", "_"))
+    try {
+      copyTree(src, tmp)
+      val before = run(s, tmp)
+      val graphBefore = graph.GraphTables.forDir(s, tmp.toString)
+      val pipelineMemos = queries.PipelinePack.memoEntriesFor(s)
+      assert(pipelineMemos >= 2, "d22's Bloom bytes and d37's eval grams are memoized")
+
+      // the same tables with rows removed, written beside the copy and
+      // swapped in; a second copy of the new tables, at another path, is
+      // the reference no memo of `s` can reach
+      val stage = Files.createDirectories(tmp.resolve("_stage"))
+      for ((table, keep) <- Seq("events" -> "event_id % 3 != 0", "documents" -> "doc_id % 7 != 3")) {
+        val staged = stage.resolve(s"$table.parquet")
+        spark.read.parquet(tmp.resolve(s"$table.parquet").toString).where(keep)
+          .write.parquet(staged.toString)
+        delete(tmp.resolve(s"$table.parquet"))
+        Files.move(staged, tmp.resolve(s"$table.parquet"))
+      }
+      delete(stage)
+      copyTree(tmp, fresh)
+
+      // the first keyed access after the rewrite drops the stale entries
+      queries.PipelinePack.documentsKey(s, tmp.toString)
+      assert(queries.PipelinePack.memoEntriesFor(s) === 0)
+      val after = run(s, tmp)
+      assert(queries.PipelinePack.memoEntriesFor(s) === pipelineMemos, "rebuilt")
+      assert(!(graph.GraphTables.forDir(s, tmp.toString) eq graphBefore), "graph rebuilt")
+
+      val reference = run(ref, fresh)
+      for (e <- entries) {
+        assert(after(e) === reference(e), s"$e follows the new rows")
+        assert(after(e) !== before(e), s"$e: removing rows changes the answer")
+      }
+    } finally {
+      SessionMemos.evict(s); SessionMemos.evict(ref)
+      delete(tmp); delete(fresh)
+      for (root <- Seq("/tmp/graft_sigindex", "/tmp/graft_annindex"); d <- indexDirs) {
+        val r = java.nio.file.Paths.get(root)
+        if (Files.isDirectory(r)) {
+          val ls = Files.list(r)
+          try ls.filter(_.getFileName.toString.startsWith(d)).forEach(p => delete(p))
+          finally ls.close()
+        }
+      }
+    }
+  }
+}
