@@ -214,39 +214,33 @@ object PipelinePack {
           .otherwise(0L).as("fp_bound_exceeded"))
   }
 
-  private val MinHashes = 128
-  private val Bands = 32
-  private val RowsPerBand = MinHashes / Bands
   private val JaccardThreshold = 0.5
 
-  /** The LSH candidate stage of [[nearDupPairs]]: distinct (doc_i, doc_j)
-    * pairs sharing any band signature. Exposed (like AnnPack's
-    * blockedCells) so the scale rehearsal can measure candidate growth
-    * directly — the shingle subtree it builds canonicalizes identically
-    * to nearDupPairs' own, so sharing is unchanged.
+  /** The most candidate pairs [[verifyPairsMaterialized]] collects to the
+    * driver (two longs each, 4 MB of payload).
     */
-  /** Per-document LSH band signatures (doc_id, band, sig) — the shared
-    * candidate-generation substrate of [[lshCandidates]] (within-corpus
-    * self-join) and [[fuzzyDecontaminationPairs]] (train x eval join).
-    */
-  private[graft] def bandSignatures(docs: DataFrame): DataFrame = {
-    // 128 minhashes per doc: hash each shingle STRING once (the expensive
-    // part), then derive the hash family from the resulting long — 128
-    // long-hashes per row instead of 128 string-hashes (~3x cheaper on
-    // long shingle text at sf0.1+).
-    val hashed = shingles(docs).withColumn("h0", xxhash64(col("g")))
-    val mhCols = (0 until MinHashes).map(i => min(xxhash64(lit(i), col("h0"))).as(s"mh_$i"))
-    val sigs = hashed.groupBy("doc_id")
-      .agg(mhCols.head, mhCols.tail: _*)
-      .select(col("doc_id"), array((0 until MinHashes).map(i => col(s"mh_$i")): _*).as("mh"))
+  private[graft] val MaxLocalCandidatePairs: Int = 1 << 18
 
-    // LSH banding: one signature per (band of 4 consecutive minhashes).
-    sigs.select(
-      col("doc_id"),
-      posexplode(expr(s"transform(sequence(0, ${Bands - 1}), " +
-        s"b -> xxhash64(b, mh[b*$RowsPerBand], mh[b*$RowsPerBand+1], mh[b*$RowsPerBand+2], mh[b*$RowsPerBand+3]))")))
+  /** Per-document LSH band signatures (doc_id, band INT, sig BIGINT) —
+    * the shared candidate-generation substrate of [[lshCandidates]]
+    * (within-corpus self-join), [[fuzzyDecontaminationPairs]] (train x
+    * eval join), the incremental and indexed ingest entries and the
+    * streaming dedup legs. One row per (document, band), 32 bands of 4
+    * minhashes over the document's distinct word 3-grams
+    * ([[graft.functions.MinHashBands]] holds the arithmetic); a document
+    * with a null text or fewer than three tokens has no rows.
+    *
+    * A per-row function: a projection and a generator, no Exchange and no
+    * aggregate, so a filter on `doc_id` pushes below the generator to the
+    * scan. Precondition: `doc_id` is unique in `docs` — two rows sharing
+    * one give two sets of signatures, where a per-document signature
+    * would merge their grams. The `documents` table and every slice of it
+    * satisfy this; a micro-batch from a stream, which need not, goes
+    * through [[bandSignaturesOf]].
+    */
+  private[graft] def bandSignatures(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), posexplode(graft.functions.MinHashBands.of(col("text"))))
       .toDF("doc_id", "band", "sig")
-  }
 
   /** Memoized band-signature table per (session, corpus key) — the
     * benchmark form of the MAINTAINED SIGNATURE INDEX d32's docstring
@@ -277,6 +271,11 @@ object PipelinePack {
     case _ => bandSignatures(docs)
   }
 
+  /** The LSH candidate stage of [[nearDupPairs]]: distinct (doc_i, doc_j)
+    * pairs sharing any band signature. Exposed (like AnnPack's
+    * blockedCells) so the scale rehearsal can measure candidate growth
+    * directly.
+    */
   private[graft] def lshCandidates(
       docs: DataFrame, cacheKey: Option[String] = None): DataFrame = {
     val bands = bandSignaturesMemo(docs, cacheKey)
@@ -354,22 +353,33 @@ object PipelinePack {
     * while the explode shrinks from O(store) to O(participants) — at
     * 100 TB, the id point-lookup shape the r16 docstring said a
     * deployment would want, with the probe paid exactly once.
+    *
+    * The collect is bounded: candidate pairs grow with delta x
+    * duplicate partners, so a batch of many near-duplicates colliding
+    * with many store documents can outgrow the driver. At most `cap`
+    * pairs are taken (one `take(cap + 1)` action); above it the
+    * shared-plan [[verifyPairs]] runs over the lazy candidates instead,
+    * with the identical output.
     */
   private[graft] def verifyPairsMaterialized(
-      docs: DataFrame, cands: DataFrame): DataFrame = {
+      docs: DataFrame, cands: DataFrame,
+      cap: Int = MaxLocalCandidatePairs): DataFrame = {
     val spark = docs.sparkSession
-    val rows = cands.collect() // one action; O(delta) rows by contract
-    val c = spark.createDataFrame(
-      java.util.Arrays.asList(rows.toIndexedSeq: _*), cands.schema)
-    val iI = cands.schema.fieldIndex("doc_i")
-    val iJ = cands.schema.fieldIndex("doc_j")
-    val ids = rows.flatMap(r => Seq(r.getLong(iI), r.getLong(iJ))).distinct
-    val parts = spark.createDataFrame(
-      java.util.Arrays.asList(ids.map(org.apache.spark.sql.Row(_)).toIndexedSeq: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType, nullable = false))))
-    verifyPairs(docs.join(broadcast(parts), Seq("doc_id"), "left_semi"), c)
+    val rows = cands.take(cap + 1)
+    if (rows.length > cap) verifyPairs(docs, cands)
+    else {
+      val c = spark.createDataFrame(
+        java.util.Arrays.asList(rows.toIndexedSeq: _*), cands.schema)
+      val iI = cands.schema.fieldIndex("doc_i")
+      val iJ = cands.schema.fieldIndex("doc_j")
+      val ids = rows.flatMap(r => Seq(r.getLong(iI), r.getLong(iJ))).distinct
+      val parts = spark.createDataFrame(
+        java.util.Arrays.asList(ids.map(org.apache.spark.sql.Row(_)).toIndexedSeq: _*),
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("doc_id",
+            org.apache.spark.sql.types.LongType, nullable = false))))
+      verifyPairs(docs.join(broadcast(parts), Seq("doc_id"), "left_semi"), c)
+    }
   }
 
   /** FUZZY decontamination: training documents that are near-duplicates
@@ -504,13 +514,13 @@ object PipelinePack {
     * transactionally consistent with the index.
     *
     * The verify leg uses [[verifyPairsMaterialized]] (r18): the
-    * candidate set is materialized ONCE (localCheckpoint — O(delta) rows
-    * by the probe contract) and the doc side semi-joins down to the
+    * candidate set is collected ONCE to the driver (O(delta) rows by the
+    * probe contract, with a row cap) and the doc side semi-joins down to the
     * participants, so verification explodes only the docs that appear in
     * some candidate pair instead of the whole store. r16 tried the
     * restriction with a LAZY semi-join and the candidate probe
     * re-executed under each consumer, doubling the entry (d36
-    * 2.8 -> 4.7s, d37 3.7 -> 8.6s); the eager checkpoint is what makes
+    * 2.8 -> 4.7s, d37 3.7 -> 8.6s); the eager collect is what makes
     * the restricted shape strictly cheaper — and it is the id
     * point-lookup plan a 100 TB deployment needs anyway, where the
     * corpus-wide explode is the term that cannot ship.
@@ -531,11 +541,14 @@ object PipelinePack {
   }
 
   /** Streaming-maintenance hook: a micro-batch's band signatures, for
-    * [[graft.streaming.SignatureIndexStream]]'s foreachBatch append leg
-    * (same derivation the index base was built with).
+    * [[graft.streaming.SignatureIndexStream]]'s foreachBatch append leg.
+    * A stream may deliver one document in several rows of a batch, so
+    * rows sharing a `doc_id` are merged first: their signature is that of
+    * the union of their grams (the element-wise min of their minhashes),
+    * the per-document signature [[bandSignatures]] gives a unique row.
     */
   private[graft] def bandSignaturesOf(docs: DataFrame): DataFrame =
-    bandSignatures(docs)
+    bandSignatures(docs.groupBy("doc_id").agg(collect_list(col("text")).as("text")))
 
   /** d38 — ingest dedup against a MAINTAINED index: the full lifecycle
     * d36 only begins. Day 0 builds the base index (everything outside

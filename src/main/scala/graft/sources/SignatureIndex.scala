@@ -169,31 +169,36 @@ object SignatureIndex {
           if (m.segments.contains(segName)) false
           else {
             // one O(delta) count decides the layout and records the
-            // manifest row count (see Meta.liveRows)
-            val segRows = sigs.count()
-            val usePlain = segRows <= plainMaxRows
-            if (usePlain) {
-              sigs.selectExpr("CAST(doc_id AS BIGINT) AS doc_id",
-                  "CAST(band AS INT) AS band", "CAST(sig AS BIGINT) AS sig")
-                .repartition(1).sortWithinPartitions("band", "sig")
-                .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .parquet(s"$path/seg/$segName/_plain")
-              stats.foreach { st =>
-                st.selectExpr("CAST(source AS STRING) AS source",
-                    "CAST(n AS BIGINT) AS n")
+            // manifest row count (see Meta.liveRows); the signatures are
+            // pinned across the count and the write, so the delta is
+            // derived once (the build discipline)
+            val pinned = sigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            try {
+              val segRows = pinned.count()
+              val usePlain = segRows <= plainMaxRows
+              if (usePlain) {
+                pinned.selectExpr("CAST(doc_id AS BIGINT) AS doc_id",
+                    "CAST(band AS INT) AS band", "CAST(sig AS BIGINT) AS sig")
+                  .repartition(1).sortWithinPartitions("band", "sig")
                   .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-                  .parquet(s"$path/seg/$segName/_stats")
-              }
-            } else writeSegment(sigs, path, segName, m.buckets, stats)
-            val liveRows =
-              if (m.liveRows.size == m.live.size) m.liveRows :+ segRows
-              else Nil
-            VersionedIndex.publish(path, next,
-              m.copy(segments = m.segments :+ segName,
-                live = m.live :+ segName, liveRows = liveRows,
-                plain = if (usePlain) m.plain :+ segName else m.plain),
-              Tables)
-            true
+                  .parquet(s"$path/seg/$segName/_plain")
+                stats.foreach { st =>
+                  st.selectExpr("CAST(source AS STRING) AS source",
+                      "CAST(n AS BIGINT) AS n")
+                    .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+                    .parquet(s"$path/seg/$segName/_stats")
+                }
+              } else writeSegment(pinned, path, segName, m.buckets, stats)
+              val liveRows =
+                if (m.liveRows.size == m.live.size) m.liveRows :+ segRows
+                else Nil
+              VersionedIndex.publish(path, next,
+                m.copy(segments = m.segments :+ segName,
+                  live = m.live :+ segName, liveRows = liveRows,
+                  plain = if (usePlain) m.plain :+ segName else m.plain),
+                Tables)
+              true
+            } finally pinned.unpersist(blocking = false)
           }
         } finally VersionedIndex.releaseClaim(path, next)
       }

@@ -58,11 +58,18 @@ object PhraseStream {
     supportCache.filterInPlace { case ((s, _, _), _) => !dead(s) }
   }
 
+  /** The corpus keys this session's support memo holds. */
+  private[graft] def memoKeysFor(session: SparkSession): Set[String] =
+    supportCache.keysIterator.collect { case (s, k, _) if s eq session => k }.toSet
+
   /** Measure the worst window's pair vocabulary at each ladder rung over
     * a BATCH slice (history or a sample — the stream is configured from
     * it, the d35 probe discipline) and return the smallest support whose
     * worst window fits `vocabBudget`. Two aggregates, memoized per
-    * (session, corpus key, budget).
+    * (session, corpus key, budget). The key names the input snapshot (s10
+    * puts the `documents.parquet` fingerprint in it), so a rewritten
+    * corpus misses and is probed again; the superseded entry, one long,
+    * stays until the session is evicted.
     */
   private[graft] def choosePairMinSupport(
       docs: DataFrame, vocabBudget: Long = 1000000L,

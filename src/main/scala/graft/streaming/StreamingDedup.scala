@@ -9,7 +9,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * seen so far without ever joining the full history.
   *
   * The index is the same banded substrate as the batch path
-  * (PipelinePack.bandSignatures: 128 minhashes → 32 band keys per doc):
+  * (PipelinePack.bandSignatures: 32 band keys per doc, each over 4 of
+  * its 128 minhashes, computed per row by graft.functions.MinHashBands):
   * state lives per (band, sig) BUCKET and holds only the doc ids that
   * hashed there, so per-bucket state is tiny (collisions are what
   * buckets exist to make rare) and the arriving doc meets history

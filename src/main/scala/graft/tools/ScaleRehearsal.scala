@@ -720,7 +720,7 @@ object ScaleRehearsal {
               .foreach(java.nio.file.Files.deleteIfExists(_))
         }
         try {
-        val sigs = graft.queries.PipelinePack.bandSignaturesOf(cBase)
+        val sigs = graft.queries.PipelinePack.bandSignatures(cBase)
         SignatureIndex.build(sigs, plain, "fp")
         SignatureIndex.build(sigs, comp, "fp")
         for (i <- 0 until 6) {
@@ -797,7 +797,7 @@ object ScaleRehearsal {
           // day-0 bases: docs residues 0..8 of 16; vectors residues 0..8
           val sigBase = docs10x.filter(fCol("doc_id") % 16L < 9L)
           SignatureIndex.build(
-            graft.queries.PipelinePack.bandSignaturesOf(sigBase),
+            graft.queries.PipelinePack.bandSignatures(sigBase),
             sigPath, "fp-week",
             stats = Some(sigBase.groupBy("source").agg(fCount(fLit(1)).as("n"))))
           AnnIndex.build(

@@ -553,7 +553,7 @@ object StreamingScaleRehearsal {
         val mod = (soakChunks + 1).toLong
         val sigPath = s"$soakWork/sig"
         SignatureIndex.build(
-          graft.queries.PipelinePack.bandSignaturesOf(
+          graft.queries.PipelinePack.bandSignatures(
             docsAll.filter(col("doc_id") % mod === 0L)),
           sigPath, "fp-soak")
         (1 to soakChunks).foreach { i =>

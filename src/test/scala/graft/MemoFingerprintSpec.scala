@@ -4,15 +4,16 @@ import java.nio.file.{Files, Path, StandardCopyOption}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The dir-keyed memos (the graph tables behind g22, d22's Bloom bytes,
-  * d37's eval-gram table) pin their input's file fingerprint: a table
+  * d37's eval-gram table, s10's measured pair support, the power-law
+  * fixture behind g22c) pin their input's file fingerprint: a table
   * rewritten mid-session is never served from the memo built on the old
   * rows.
   */
 class MemoFingerprintSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
   private val src = java.nio.file.Paths.get(TestData.dir("sf0.001"))
-  private val entries =
-    Seq("g22_common_neighbors", "d22_bloom_decontamination", "d37_incremental_manifest")
+  private val entries = Seq("g22_common_neighbors", "d22_bloom_decontamination",
+    "d37_incremental_manifest", "s10_windowed_pair_counts", "g22c_common_neighbors_powerlaw")
 
   private def delete(p: Path): Unit = if (Files.exists(p)) {
     val walk = Files.walk(p)
@@ -34,6 +35,7 @@ class MemoFingerprintSpec extends AnyFunSuite {
     entries.map(e => e -> SparkEntry.queries(e)(s, dir.toString).collect().map(_.toString).toSeq.sorted).toMap
 
   test("g22, d22 and d37 rebuild their memos and follow rewritten events and documents") {
+    // (and s10 and g22c, whose memos pin the same two tables)
     val tmp = Files.createTempDirectory("graft-memo-fp")
     val fresh = Files.createTempDirectory("graft-memo-fp-ref")
     val s = spark.newSession()
@@ -45,12 +47,18 @@ class MemoFingerprintSpec extends AnyFunSuite {
       val graphBefore = graph.GraphTables.forDir(s, tmp.toString)
       val pipelineMemos = queries.PipelinePack.memoEntriesFor(s)
       assert(pipelineMemos >= 2, "d22's Bloom bytes and d37's eval grams are memoized")
+      val supportKeys = streaming.PhraseStream.memoKeysFor(s)
+      assert(supportKeys.size === 1, "s10's support is memoized")
+      val fixtureBefore = queries.GraphPack.powerLawEdgesMemo(s, tmp.toString)
 
       // the same tables with rows removed, written beside the copy and
       // swapped in; a second copy of the new tables, at another path, is
       // the reference no memo of `s` can reach
       val stage = Files.createDirectories(tmp.resolve("_stage"))
-      for ((table, keep) <- Seq("events" -> "event_id % 3 != 0", "documents" -> "doc_id % 7 != 3")) {
+      // (the events rewrite drops users too, so the graph's node count,
+      // which sizes the power-law fixture, changes)
+      for ((table, keep) <- Seq("events" -> "event_id % 3 != 0 AND user_id % 5 != 2",
+          "documents" -> "doc_id % 7 != 3")) {
         val staged = stage.resolve(s"$table.parquet")
         spark.read.parquet(tmp.resolve(s"$table.parquet").toString).where(keep)
           .write.parquet(staged.toString)
@@ -66,6 +74,10 @@ class MemoFingerprintSpec extends AnyFunSuite {
       val after = run(s, tmp)
       assert(queries.PipelinePack.memoEntriesFor(s) === pipelineMemos, "rebuilt")
       assert(!(graph.GraphTables.forDir(s, tmp.toString) eq graphBefore), "graph rebuilt")
+      val supportAfter = streaming.PhraseStream.memoKeysFor(s) -- supportKeys
+      assert(supportAfter.size === 1, "s10's support probed again under the new fingerprint")
+      assert(!(queries.GraphPack.powerLawEdgesMemo(s, tmp.toString) eq fixtureBefore),
+        "power-law fixture rebuilt")
 
       val reference = run(ref, fresh)
       for (e <- entries) {

@@ -211,6 +211,33 @@ class PipelineSpec extends AnyFunSuite {
     assert(got.map(_._1) === deltaIds.toSet)
   }
 
+  test("verifyPairsMaterialized above its cap falls back to the shared plan, bit-identical (d32, d38)") {
+    import graft.sources.SignatureIndex
+    val docs = graft.Tables.documents(spark, dir)
+    def same(cands: org.apache.spark.sql.DataFrame): Unit = {
+      assert(cands.count() > 1L, "the tiny cap must be exceeded")
+      val local = PipelinePack.verifyPairsMaterialized(docs, cands)
+      val shared = PipelinePack.verifyPairsMaterialized(docs, cands, cap = 1)
+      // the fallback plan reads the lazy candidates, not local relations
+      assert(local.queryExecution.optimizedPlan.toString.contains("LocalRelation"))
+      assert(!shared.queryExecution.optimizedPlan.toString.contains("LocalRelation"))
+      assert(shared.collect().map(_.toString).sorted === local.collect().map(_.toString).sorted)
+      assert(local.count() > 0L)
+    }
+    // d32: delta x corpus candidates from the in-flight signatures
+    same(PipelinePack.incrementalCandidates(docs))
+    // d38: the delta probing an index that was built, appended to and
+    // compacted
+    val root = java.nio.file.Files.createTempDirectory("graft-verify-cap")
+    try {
+      PipelinePack.maintainedIngestDedup(spark, dir, indexRoot = root.toString).collect()
+      val path = s"$root/${dir.replaceAll("[^A-Za-z0-9._-]", "_")}_m10d7r8-maint"
+      same(PipelinePack.probeIndexCandidates(docs, 10L, 8L,
+        SignatureIndex.serveSplit(spark, path)))
+    } finally graft.sources.VersionedIndex.walkAll(root).reverse
+      .foreach(java.nio.file.Files.deleteIfExists(_))
+  }
+
   test("d33 source cap keeps exactly the top-10 per source by (quality desc, doc_id)") {
     val docs = graft.Tables.documents(spark, dir)
     val got = PipelinePack.sourceCap(docs).collect()

@@ -110,13 +110,13 @@ class ExplainSpec extends AnyFunSuite {
     graft.queries.PipelinePack.defs
       .find(_.name == "d36_indexed_ingest_dedup").get.run(spark, dir).collect()
     pinIndexProbePlan(
-      graft.queries.PipelinePack.indexedCandidates(spark, dir))
+      graft.queries.PipelinePack.indexedCandidates(spark, dir), deltaRes = 7L)
   }
 
   test("d38: the compacted maintained index keeps d36's probe shape") {
     // same pins over the full lifecycle: the served snapshot has been
     // appended to and compacted, and must still meet the delta through
-    // its bucket layout with only the delta's partial MinHash
+    // its bucket layout with only the delta minhashed
     graft.queries.PipelinePack.defs
       .find(_.name == "d38_maintained_ingest_dedup").get.run(spark, dir).collect()
     val path = s"/tmp/graft_sigindex/${dir.replaceAll("[^A-Za-z0-9._-]", "_")}" +
@@ -124,12 +124,12 @@ class ExplainSpec extends AnyFunSuite {
     pinIndexProbePlan(
       graft.queries.PipelinePack.probeIndexCandidates(
         graft.Tables.documents(spark, dir), 10L, 8L,
-        graft.sources.SignatureIndex.serveSplit(spark, path)))
+        graft.sources.SignatureIndex.serveSplit(spark, path)), deltaRes = 8L)
   }
 
-  private def pinIndexProbePlan(candidates: => org.apache.spark.sql.DataFrame): Unit = {
+  private def pinIndexProbePlan(
+      candidates: => org.apache.spark.sql.DataFrame, deltaRes: Long): Unit = {
     import org.apache.spark.sql.execution._
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
 
@@ -167,26 +167,43 @@ class ExplainSpec extends AnyFunSuite {
           s"Exchange above the bucketed index scan — bucket layout unused:\n$side")
       }
 
-      // 2. exactly ONE partial MinHash aggregation executes — the
-      //    DELTA's (final aggs above the shared exchange re-read its
-      //    shuffle files, never source text). A corpus-side recompute
-      //    would add a second partial over a different scan.
-      import org.apache.spark.sql.catalyst.expressions.aggregate.{Partial, PartialMerge}
-      val sigPartials = all.collect {
-        case a: BaseAggregateExec
-          if a.aggregateExpressions.exists(e =>
-            (e.mode == Partial || e.mode == PartialMerge) &&
-              e.toString.contains("xxhash64")) => a
-      }
-      assert(sigPartials.size <= 1,
-        s"${sigPartials.size} partial MinHash aggregates — corpus side re-minhashed?")
+      // 2. only the DELTA is minhashed: the delta's signatures are
+      //    computed, and every signature generator reads the delta slice
+      //    alone — a corpus-side recompute would add one over the whole
+      //    store; none sits on the index side of a probe join
+      val gens = minhashGenerators(all)
+      assert(gens.nonEmpty, s"the delta's signatures are not computed:\n$df")
+      assertDeltaOnly(gens, deltaRes)
+      idxSides.flatten.foreach(side => assert(minhashGenerators(flatten(side)).isEmpty,
+        s"the index side is minhashed:\n$side"))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  /** The band-signature generators (one per signature derivation) among
+    * executed nodes.
+    */
+  private def minhashGenerators(nodes: Seq[org.apache.spark.sql.execution.SparkPlan]) =
+    nodes.collect {
+      case g: org.apache.spark.sql.execution.GenerateExec
+        if g.generator.find(_.isInstanceOf[graft.functions.MinHashBands]).isDefined => g
+    }
+
+  /** Every generator reads documents filtered to `doc_id % 10 = deltaRes`. */
+  private def assertDeltaOnly(
+      gens: Seq[org.apache.spark.sql.execution.GenerateExec], deltaRes: Long): Unit = {
+    val delta = s"% 10) = $deltaRes)"
+    gens.foreach { g =>
+      val filters = flatten(g).collect {
+        case f: org.apache.spark.sql.execution.FilterExec => f.condition.toString
+      }
+      assert(filters.exists(_.contains(delta)),
+        s"a signature generator reads more than the delta slice — corpus side re-minhashed?\n$g")
+    }
   }
 
   test("d37: admission counts read the maintained stats table; only the delta is minhashed") {
     import org.apache.spark.sql.execution._
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.catalyst.expressions.aggregate.{Partial, PartialMerge}
     val q = graft.queries.PipelinePack.defs
       .find(_.name == "d37_incremental_manifest").getOrElse(fail("no d37"))
     val df = q.run(spark, dir)
@@ -217,17 +234,9 @@ class ExplainSpec extends AnyFunSuite {
         s"per-source aggregate rescans the corpus: $corpusScans\n$a")
     }
 
-    // 3. exactly ONE partial MinHash aggregation executes — the DELTA's
-    //    (the corpus side is the served index; d36's discipline holds in
-    //    the composed gate)
-    val sigPartials = all.collect {
-      case a: BaseAggregateExec
-        if a.aggregateExpressions.exists(e =>
-          (e.mode == Partial || e.mode == PartialMerge) &&
-            e.toString.contains("xxhash64")) => a
-    }
-    assert(sigPartials.size <= 1,
-      s"${sigPartials.size} partial MinHash aggregates — corpus side re-minhashed?")
+    // 3. only the DELTA is ever minhashed (the corpus side is the served
+    //    index; d36's discipline holds in the composed gate)
+    assertDeltaOnly(minhashGenerators(all), deltaRes = 7L)
   }
 
   test("e12: serving reads ONLY index tables — no corpus scan, no encode, bucketed codes") {
