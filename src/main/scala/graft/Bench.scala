@@ -8,9 +8,10 @@ import scala.collection.concurrent.TrieMap
 
 /** Benchmark main. Prints ONE JSON line:
   * `{"metric":"total","value":N,"unit":"sec","sf":...,"tier":...,
-  *   "skipped":[...],"errors":{},"flaky":{},"spread":{...},"jobs":{...},
-  *   "queries":{...}}`, where `jobs` is each entry's median count of
-  * Spark jobs per timed pass (build and action together).
+  *   "skipped":[...],"errors":{},"flaky":{},"spread":{...},"memos":{...},
+  *   "jobs":{...},"queries":{...}}`, where `memos` is each session memo's
+  * entry count after the timed passes and `jobs` is each entry's median
+  * count of Spark jobs per timed pass (build and action together).
   *
   * Harness rules (VERDICT r01 "What's wrong" #2/#3, r03 bench hygiene):
   *   - deterministic query order (sorted by name) so run-to-run and
@@ -192,6 +193,8 @@ object Bench {
     val js = jobMedians.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
     val jobsTotal = jobMedians.map(_._2).sum
     val sp = spreads.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+    val ms = SessionMemos.residency(Some(spark)).map(r => s"${jstr(r.memo)}:${r.entries}")
+      .mkString("{", ",", "}")
     val errs = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
     val flk = flaky.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
     val skp = skipped.map(jstr).mkString("[", ",", "]")
@@ -200,7 +203,7 @@ object Bench {
     // of the stream, and r6's artifact lost the medians because `queries`
     // led the line — the per-entry medians now close the object so a
     // truncated capture still ends with them (verdict r6 #3/#4)
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","tier":${jstr(tier)},"skipped":$skp,"errors":$errs,"flaky":$flk,"spread":$sp,"jobs":$js,"queries":$qs}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","tier":${jstr(tier)},"skipped":$skp,"errors":$errs,"flaky":$flk,"spread":$sp,"memos":$ms,"jobs":$js,"queries":$qs}"""
     println(line)
     // stdout is a lossy channel (the driver keeps only the tail of the
     // stream — r7's artifact lost ~27 medians to the front clip), so the

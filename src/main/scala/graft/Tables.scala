@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
-import scala.collection.concurrent.TrieMap
 
 /** Loaders for the driver-generated testdata tables (repo:TESTDATA.md).
   *
@@ -15,34 +14,31 @@ import scala.collection.concurrent.TrieMap
   * schema once per file fingerprint. A bare `spark.read.parquet(path)`
   * runs one Spark job to read the footers on every call, before the
   * caller's own action; with the schema passed in, the read starts no
-  * job. The rule:
-  *   - the memo keeps one inferred schema per (session, path), next to
-  *     the path's [[graft.sources.VersionedIndex.dirFingerprint]] at
-  *     inference time (by default file names, sizes and mtimes from a
-  *     file-system walk — a stat, never a job);
-  *   - a read whose fingerprint equals the stored one passes the stored
-  *     schema; a miss or a changed fingerprint infers again and replaces
-  *     the entry;
+  * job. The schema memo is a [[SessionMemo]] keyed by the path's
+  * [[SessionMemo.Input]]: the path plus its
+  * [[graft.sources.VersionedIndex.dirFingerprint]] (by default file
+  * names, sizes and mtimes from a file-system walk, a stat and never a
+  * job), taken BEFORE inference:
+  *   - a read whose fingerprint has an entry passes the stored schema;
+  *   - a changed fingerprint is a new key: its miss infers again and
+  *     drops, with the superseded schema, every memo entry of the
+  *     session derived from the old file;
   *   - an `absent` fingerprint is never memoized: the path is missing,
   *     or the provider cannot see it (an object-store path the default
   *     `MtimeWalkSnapshot` cannot walk), so every such read infers.
-  * The fingerprint is taken BEFORE inference, so a rewrite racing the
-  * inference leaves an entry whose fingerprint no longer matches and the
-  * next read infers again. Limit: a rewrite that keeps every file's name,
-  * length and mtime (to the millisecond) is not seen, and the old schema
-  * is served for it.
+  * A rewrite racing the inference leaves an entry whose fingerprint no
+  * longer matches, and the next read infers again. Limit: a rewrite
+  * that keeps every file's name, length and mtime (to the millisecond)
+  * is not seen, and the old schema is served for it.
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** (session, path) → (fingerprint, inferred schema); see [[read]]. */
-  private val schemas = TrieMap.empty[(SparkSession, String), (String, StructType)]
-
-  SessionMemos.registerEvictor { dead =>
-    schemas.filterInPlace { case ((s, _), _) => !dead(s) }
-  }
+  /** The inferred schema per (session, path at one fingerprint); see [[read]]. */
+  private val schemas =
+    SessionMemo.plain[SessionMemo.Input, StructType]("tables.schemas")(Seq(_))
 
   /** Read one Parquet input table, inferring its schema only when the
     * path's fingerprint changed since the last read in this session (see
@@ -50,21 +46,16 @@ object Tables {
     * a hit reads exactly the types an inference would produce.
     */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val fp = graft.sources.VersionedIndex.dirFingerprint(path)
-    schemas.get((spark, path)) match {
-      case Some((`fp`, schema)) => spark.read.schema(schema).parquet(path)
-      case _ =>
-        val df = spark.read.parquet(path)
-        if (fp != "absent") {
-          SessionMemos.arm(spark)
-          schemas.put((spark, path), (fp, df.schema))
-        }
-        df
+    val input = SessionMemo.Input.file(path)
+    var inferred: Option[DataFrame] = None
+    val schema = schemas(spark, Some(input).filter(_.version != "absent")) {
+      val df = spark.read.parquet(path)
+      inferred = Some(df)
+      df.schema
     }
+    // a miss serves the read that inferred, as a bare read would
+    inferred.getOrElse(spark.read.schema(schema).parquet(path))
   }
-
-  private[graft] def memoEntriesFor(session: SparkSession): Int =
-    schemas.keysIterator.count(_._1 eq session)
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     read(spark, s"$dir/$name.parquet")

@@ -51,7 +51,8 @@ import scala.jdk.CollectionConverters._
   * client's round trip, they tell transport time apart from handler time;
   * a `/metrics` request is counted after its own body is rendered. Two
   * more counters show what `/certify` and `/hash` reuse: state-hash roots
-  * served and the node row chunks re-encoded for them.
+  * served and the node row chunks re-encoded for them. Last come the
+  * session memos' residency: entries held, hits and misses, per memo.
   */
 final class HttpFacade(
     session: GraftSession,
@@ -375,7 +376,8 @@ final class HttpFacade(
         val stage = new StageAssessor().assessFromMetrics(m)
         StatusApi.prometheusText(m, stage)
       }
-      (200, gauges + StatusApi.stateHashText(session) + routeCounters)
+      (200, gauges + StatusApi.stateHashText(session) + routeCounters +
+        graft.SessionMemos.prometheusText)
     }
 
     route("/health", "GET", open = true) { _ =>

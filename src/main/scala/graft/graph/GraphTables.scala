@@ -4,7 +4,6 @@ import graft.core.{InMemoryGraph, Limits, Node}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import scala.collection.concurrent.TrieMap
 
 /** The distributed graph: four Parquet-derivable tables.
   *
@@ -81,76 +80,34 @@ object GraphTables {
         col("event_type").as("attribute"),
         col("props").as("value"))
 
-  private val cache = TrieMap.empty[(SparkSession, String), GraphFrames]
-
-  /** The `events.parquet` fingerprint each (session, dir)'s graph memos
-    * were built from.
+  /** Graph tables per (session, dir), derived from the dir's
+    * `events.parquet` at the fingerprint taken before the build. Each
+    * entry pins its three persisted tables until the session ends or the
+    * event log changes: a regenerated log supersedes the entry and
+    * everything derived from it (the BFS closures, the triangle table,
+    * the undirected snapshot), which all rebuild from the current rows.
     */
-  private val eventsFpPins = TrieMap.empty[(SparkSession, String), String]
+  private[graft] val graphs = new graft.SessionMemo[String, GraphFrames](
+    "graph_tables.graphs",
+    dir => Seq(graft.SessionMemo.Input.file(s"$dir/events.parquet")),
+    identity,
+    g => Seq(g.nodes, g.edges, g.properties).foreach(graft.SessionMemos.safeUnpersist))
 
-  /** Build (or fetch cached) graph tables for a testdata dir. The cache is
-    * per-(session, dir); entries pin persisted tables until
-    * [[invalidate]] — callers that churn through many dirs own eviction.
-    * Each call pins the fingerprint of the dir's `events.parquet`; when it
-    * changed since the last call (a regenerated event log), the dir is
-    * [[invalidate]]d first, so the graph and everything derived from it
-    * rebuild from the current rows.
+  /** Build (or fetch the memoized) graph tables for a testdata dir. */
+  def forDir(spark: SparkSession, dir: String): GraphFrames =
+    graphs(spark, Some(dir))(build(validSignals(signalsFromEvents(spark, dir))))
+
+  /** Drop a dir's graph tables and every memo entry derived from its
+    * event log, releasing what each pinned.
     */
-  def forDir(spark: SparkSession, dir: String): GraphFrames = {
-    graft.SessionMemos.arm(spark)
-    val fp = graft.sources.VersionedIndex.dirFingerprint(s"$dir/events.parquet")
-    if (eventsFpPins.put((spark, dir), fp).exists(_ != fp)) invalidate(spark, dir)
-    cache.getOrElseUpdate((spark, dir), build(validSignals(signalsFromEvents(spark, dir))))
-  }
+  def invalidate(spark: SparkSession, dir: String): Unit =
+    graft.SessionMemos.invalidate(spark, s"$dir/events.parquet")
 
-  /** Drop a dir's graph tables and every memo derived from them (the BFS
-    * closures keyed on its graph, the triangle table g21 keys on `dir`,
-    * the undirected snapshot g22 keys on `"$dir#und"`), releasing what
-    * each pinned.
+  /** The inputs a memoized graph was built from: what a memo over it
+    * derives from (none for a graph [[forDir]] did not build).
     */
-  def invalidate(spark: SparkSession, dir: String): Unit = {
-    cache.remove((spark, dir)).foreach { g =>
-      g.nodes.unpersist(); g.edges.unpersist(); g.properties.unpersist()
-      bfsClosureCache.filterInPlace { case ((s, gk, _, _, _), df) =>
-        if ((s eq spark) && (gk eq g)) { graft.SessionMemos.releaseCheckpoints(df); false }
-        else true
-      }
-    }
-    triCache.remove((spark, dir)).foreach { df =>
-      df.unpersist(); graft.SessionMemos.releaseCheckpoints(df)
-    }
-    undCache.remove((spark, s"$dir#und")).foreach(graft.SessionMemos.releaseCheckpoints)
-  }
-
-  // session-scoped eviction (r10 verdict #5): a stopping session (or an
-  // explicit SessionMemos.evict) unpins every graph it built
-  graft.SessionMemos.registerEvictor { dead =>
-    eventsFpPins.filterInPlace { case ((s, _), _) => !dead(s) }
-    cache.filterInPlace { case ((s, _), g) =>
-      if (dead(s)) {
-        graft.SessionMemos.safeUnpersist(g.nodes)
-        graft.SessionMemos.safeUnpersist(g.edges)
-        graft.SessionMemos.safeUnpersist(g.properties)
-        false
-      } else true
-    }
-    triCache.filterInPlace { case ((s, _), df) =>
-      if (dead(s)) {
-        graft.SessionMemos.safeUnpersist(df)
-        graft.SessionMemos.releaseCheckpoints(df) // triangleCounts' und/fwd cuts
-        false
-      } else true
-    }
-    undCache.filterInPlace { case ((s, _), df) =>
-      if (dead(s)) { graft.SessionMemos.releaseCheckpoints(df); false } else true
-    }
-  }
-
-  private[graft] def memoEntriesFor(session: SparkSession): Int =
-    cache.keysIterator.count(_._1 eq session) +
-      triCache.keysIterator.count(_._1 eq session) +
-      undCache.keysIterator.count(_._1 eq session) +
-      bfsClosureCache.keysIterator.count(_._1 eq session)
+  private def inputsOf(g: GraphFrames): Seq[graft.SessionMemo.Input] =
+    graphs.inputsBehind(g.nodes.sparkSession, g)
 
   /** Derive nodes / edges / properties from a validated signal log.
     *
@@ -339,29 +296,18 @@ object GraphTables {
   /** Memoized per-node triangle counts per (session, key) — g26's
     * clustering coefficient is DEFINED over g21's triangle table, so the
     * two entries otherwise run the whole orientation + wedge-join chain
-    * twice (the two heaviest graph entries at sf1: ~14.5s each). Same
-    * lifecycle as every other memo: persisted, evictor-registered,
-    * memo-off hook for plan assertions (ScaleRehearsal checks the RAW
-    * [[triangleCounts]] plan, which this wrapper never caches).
+    * twice (the two heaviest graph entries at sf1: ~14.5s each).
+    * Persisted, and released together with triangleCounts' und/fwd
+    * checkpoint cuts. ScaleRehearsal checks the RAW [[triangleCounts]]
+    * plan, which this wrapper never caches.
     */
-  private val triCache = TrieMap.empty[(SparkSession, String), DataFrame]
-
-  @volatile private[graft] var triMemoEnabled = true
-
-  private[graft] def clearTriMemo(session: SparkSession): Unit =
-    triCache.filterInPlace { case ((s, _), df) =>
-      if (s eq session) { df.unpersist(blocking = true); false } else true
-    }
+  private[graft] val triangles = new graft.SessionMemo[(String, GraphFrames), DataFrame](
+    "graph_tables.triangles", k => inputsOf(k._2),
+    _.persist(StorageLevel.MEMORY_AND_DISK),
+    df => { graft.SessionMemos.safeUnpersist(df); graft.SessionMemos.releaseCheckpoints(df) })
 
   def triangleCountsMemo(g: GraphFrames, cacheKey: Option[String]): DataFrame =
-    cacheKey match {
-      case Some(k) if triMemoEnabled =>
-        val spark = g.nodes.sparkSession
-        graft.SessionMemos.arm(spark)
-        triCache.getOrElseUpdate((spark, k), triangleCounts(g)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      case _ => triangleCounts(g)
-    }
+    triangles(g.nodes.sparkSession, cacheKey.map((_, g)))(triangleCounts(g))
 
   /** Memoized canonical undirected edge snapshot per (session, key) —
     * g22 and g22b both read the identical
@@ -370,7 +316,8 @@ object GraphTables {
     * per entry at sf0.1). Released on eviction or [[invalidate]]; the
     * checkpointed plan carries no lineage, so a later caller rebuilds it.
     */
-  private val undCache = TrieMap.empty[(SparkSession, String), DataFrame]
+  private val undirected = graft.SessionMemo.checkpointed[(String, GraphFrames)](
+    "graph_tables.undirected")(k => inputsOf(k._2))
 
   /** Common-neighbor similarity over the undirected simple graph: for
     * every node pair sharing at least one neighbor, the shared-neighbor
@@ -404,11 +351,7 @@ object GraphTables {
       capAtMedianDegree: Boolean = false,
       cacheKey: Option[String] = None): DataFrame = {
     val und = cacheKey match {
-      case Some(k) =>
-        val spark = g.nodes.sparkSession
-        graft.SessionMemos.arm(spark)
-        undCache.getOrElseUpdate((spark, k),
-          undirectedSimpleEdges(g).localCheckpoint())
+      case Some(k) => undirected(g.nodes.sparkSession, Some((k, g)))(undirectedSimpleEdges(g))
       case None => undirectedSimpleEdges(g).localCheckpoint()
     }
     commonNeighborsFromEdges(und, hubCap, capAtMedianDegree,
@@ -865,25 +808,18 @@ object GraphTables {
     * GraphFrames is a case class over Datasets (reference equality), so a
     * rebuilt graph is a different key, never a stale hit.
     */
-  private val bfsClosureCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, GraphFrames, Long, Int, Option[Long]), DataFrame]
-
-  graft.SessionMemos.registerEvictor { dead =>
-    bfsClosureCache.filterInPlace { case ((s, _, _, _, _), df) =>
-      if (dead(s)) { graft.SessionMemos.releaseCheckpoints(df); false } else true
-    }
-  }
+  private val bfsClosures =
+    graft.SessionMemo.checkpointed[(GraphFrames, Long, Int, Option[Long])](
+      "graph_tables.bfs_closures")(k => inputsOf(k._1))
 
   def traverseBfsMemo(
       g: GraphFrames,
       start: Long,
       depth: Int,
       minWeight: Option[Long] = None): DataFrame = {
-    val s = g.nodes.sparkSession
-    graft.SessionMemos.arm(s)
     val bound = math.min(math.max(depth, 0), Limits.MaxTraversalDepth)
-    bfsClosureCache.getOrElseUpdate((s, g, start, bound, minWeight),
-      traverseBfs(g, start, bound, minWeight).localCheckpoint())
+    bfsClosures(g.nodes.sparkSession, Some((g, start, bound, minWeight)))(
+      traverseBfs(g, start, bound, minWeight))
   }
 
   /** Collect the BFS closure from `start` (depth-bounded) into an

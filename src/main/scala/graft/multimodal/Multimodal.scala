@@ -23,15 +23,18 @@ object Multimodal {
   val FeatureDim = 16
 
   /** Corpora whose twin-id injectivity guard already ran green, keyed by
-    * (session, canonical-plan semantic hash, every). The guard is an
-    * eager count() job; without the memo every pngMediaWithTwins CALL
-    * paid a full doc_id scan at DataFrame-construction time (ADVICE
-    * r12) — a surprising side effect for callers that only build the
-    * plan. Entries are just receipts (Unit), so eviction is reference
-    * cleanup only.
+    * (session, canonical-plan semantic hash, every, the files the plan
+    * scans at their fingerprints). The guard is an eager count() job;
+    * without the memo every pngMediaWithTwins CALL paid a full doc_id
+    * scan at DataFrame-construction time (ADVICE r12) — a surprising
+    * side effect for callers that only build the plan. The plan string
+    * names the scanned paths but not their contents, so the key also
+    * carries their fingerprints: a rewritten corpus is guarded again.
+    * Entries are just receipts (Unit).
     */
-  private val twinGuardCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), Unit]
+  private val twinGuards =
+    graft.SessionMemo.plain[(String, Int, Seq[graft.SessionMemo.Input]), Unit](
+      "multimodal.twin_guard")(_._3)
 
   /** m08's arriving-batch block rows, pinned per (session, index path)
     * with the corpus fingerprint they were decoded from: the probe plan
@@ -39,19 +42,11 @@ object Multimodal {
     * doc_i, (doc_j,band)), so the exchanges never canonicalize to one
     * reusable subtree and an unpinned plan re-decodes every batch PNG
     * once per leg. The batch is O(delta)-small; a regenerated corpus
-    * (fingerprint mismatch) drops and re-derives the pin.
+    * supersedes the pin and it is derived again.
     */
-  private val deltaBlocksCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, org.apache.spark.sql.DataFrame)]
-
-  graft.SessionMemos.registerEvictor { dead =>
-    twinGuardCache.filterInPlace { case ((s, _, _), _) => !dead(s) }
-    deltaBlocksCache.filterInPlace { case ((s, _), (_, df)) =>
-      if (dead(s)) { graft.SessionMemos.safeUnpersist(df); false } else true
-    }
-  }
-
-  private[multimodal] def twinGuardCacheSize: Int = twinGuardCache.size
+  private val deltaBlocks =
+    graft.SessionMemo.persisted[(String, graft.SessionMemo.Input)]("multimodal.delta_blocks")(
+      k => Seq(k._2))
 
   val mediaSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType, nullable = false),
@@ -183,13 +178,12 @@ object Multimodal {
     // hash only as a bucket and confirms with semanticEquals — a bucket
     // collision here would silently skip a loud-failure safety check
     val canon = docs.queryExecution.analyzed.canonicalized
-    val guardKey = (spark,
+    val guardKey = (
       s"${canon.semanticHash()}:" + java.security.MessageDigest.getInstance("MD5")
         .digest(canon.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         .map(b => f"$b%02x").mkString,
-      every)
-    twinGuardCache.getOrElseUpdate(guardKey, {
-      graft.SessionMemos.arm(spark)
+      every, graft.SessionMemo.Input.scannedBy(docs))
+    twinGuards(spark, Some(guardKey)) {
       val clashes = docs.select(col("doc_id"))
         .filter(col("doc_id") % every === 0)
         .select((col("doc_id") + TwinOffset).as("doc_id"))
@@ -197,7 +191,7 @@ object Multimodal {
         .count()
       require(clashes == 0L,
         s"$clashes original doc_ids collide with source+TwinOffset twin ids")
-    })
+    }
     docs.select(col("doc_id")).as[Long]
       .flatMap(id => if (id % every == 0) Seq((id, id, false), (id + TwinOffset, id, true))
                      else Seq((id, id, false)))
@@ -359,31 +353,9 @@ object Multimodal {
             .as("x"))
         .select(col("doc_id"), col("x.band").as("band"), col("x.sig").as("sig"))
     val path = s"$indexRoot/${dir.replaceAll("[^A-Za-z0-9._-]", "_")}_img-ahash64"
-    val fp = SignatureIndex.dirFingerprint(s"$dir/documents.parquet")
-    val idx = SignatureIndex.ensure(spark, blocksOf(media.filter(!isDelta)), path, fp)
-    val deltaB = deltaBlocksCache.get((spark, path)) match {
-      case Some((f, df)) if f == fp => df
-      case stale =>
-        // atomic remove-then-putIfAbsent (ADVICE r14): the plain put
-        // raced — two concurrent cold probes could both persist the
-        // blocks, and the overwritten entry's pin leaked until session
-        // death. The loser now unpersists its own copy and rides the
-        // winner's.
-        stale.foreach { e =>
-          if (deltaBlocksCache.remove((spark, path), e))
-            graft.SessionMemos.safeUnpersist(e._2)
-        }
-        graft.SessionMemos.arm(spark)
-        val b = blocksOf(media.filter(isDelta))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        deltaBlocksCache.putIfAbsent((spark, path), (fp, b)) match {
-          case None => b
-          case Some((f, winner)) if f == fp =>
-            graft.SessionMemos.safeUnpersist(b); winner
-          case Some(_) => // concurrent regeneration (out of contract):
-            graft.SessionMemos.safeUnpersist(b); b // serve unpinned
-        }
-    }
+    val corpus = graft.SessionMemo.Input.file(s"$dir/documents.parquet")
+    val idx = SignatureIndex.ensure(spark, blocksOf(media.filter(!isDelta)), path, corpus.version)
+    val deltaB = deltaBlocks(spark, Some((path, corpus)))(blocksOf(media.filter(isDelta)))
     // probe leg: the batch meets the served index; the earlier-partner
     // residual keeps the probe idempotent under maintenance (once the
     // batch's own blocks are appended, re-probing yields the same set)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QDef, SessionMemos, Tables}
+import graft.{QDef, SessionMemo, SessionMemos, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -194,22 +194,11 @@ object AnnPack {
     * floors pay only their own approx leg + the hit join. The pinned
     * result is Q x K rows (~1000), localCheckpoint-materialized.
     */
-  private val bruteCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  SessionMemos.registerEvictor { dead =>
-    bruteCache.filterInPlace { case ((s, _), df) =>
-      if (dead(s)) { SessionMemos.releaseCheckpoints(df); false } else true
-    }
-  }
+  private val brutes = SessionMemo.checkpointed[String]("ann.brute")(SessionMemo.tableOf)
 
   private def bruteMemo(emb: DataFrame, cacheKey: Option[String])(
-      build: => DataFrame): DataFrame = cacheKey match {
-    case Some(k) =>
-      SessionMemos.arm(emb.sparkSession)
-      bruteCache.getOrElseUpdate((emb.sparkSession, k), build.localCheckpoint())
-    case None => build
-  }
+      build: => DataFrame): DataFrame =
+    brutes(emb.sparkSession, cacheKey)(build)
 
   /** Exact top-k: (q_id, rank, neighbor_id). Per-row norms are hoisted to
     * the join inputs ([[cosinePre]]): the corpus norm is one dot product
@@ -363,10 +352,8 @@ object AnnPack {
     * cross-session form). Keyless calls (rehearsals measuring the raw
     * derivation, ad-hoc corpora) never touch the memo.
     */
-  private val coarseCellsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  @volatile private[graft] var coarseMemoEnabled = true
+  private[graft] val coarseCells =
+    SessionMemo.persisted[String]("ann.coarse_cells")(SessionMemo.tableOf)
 
   /** Receipt hook: the (probed pcells, total pcells) of the most recent
     * partition-pruned serve of EACH index, keyed by the index's canonical
@@ -381,14 +368,15 @@ object AnnPack {
     * identity (+ nprobe): the batch rows and the probe pairs are
     * deterministic functions of one committed version, but deriving them
     * costs two driver round-trip jobs per serve (the r15 sf1 profile put
-    * them at ~0.7s of every warm e12/e13/e14 pass). Any publish bumps
-    * the version and naturally invalidates; values are bounded by the
-    * query-batch contract (≤ NumQueries vectors + nprobe x NumQueries
-    * probe pairs).
+    * them at ~0.7s of every warm e12/e13/e14 pass). Each entry derives
+    * from its (index path, version), so a publish supersedes the older
+    * version's batch and a long-lived session holds one per index;
+    * values are bounded by the query-batch contract (≤ NumQueries
+    * vectors + nprobe x NumQueries probe pairs).
     */
-  private val servedQueryBatchCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String, Int),
-      (Seq[(Long, Seq[Float])], Seq[(Long, Long)])]
+  private val servedQueryBatches = SessionMemo.plain[(String, String, Int),
+      (Seq[(Long, Seq[Float])], Seq[(Long, Long)])]("ann.served_query_batch")(
+    k => Seq(SessionMemo.Input(k._1, k._2)))
 
   /** The serve-time ADC distance table per (session, index path, version)
     * — like the query batch above, a deterministic pure function of the
@@ -398,29 +386,13 @@ object AnnPack {
     * removes one join + shuffle-aggregate + broadcast-build per warm
     * serving pass across e12–e15.
     */
-  private val servedDtCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String),
-      (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType)]
+  private val servedDts = SessionMemo.plain[(String, String),
+      (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType)](
+    "ann.served_dt")(k => Seq(SessionMemo.Input(k._1, k._2)))
 
-  SessionMemos.registerEvictor { dead =>
-    servedQueryBatchCache.filterInPlace { case ((s, _, _, _), _) => !dead(s) }
-    servedDtCache.filterInPlace { case ((s, _, _), _) => !dead(s) }
-  }
-
-  private[graft] def clearCoarseMemo(session: SparkSession): Unit =
-    coarseCellsCache.filterInPlace { case ((s, _), df) =>
-      if (s eq session) { df.unpersist(blocking = true); false } else true
-    }
-
-  private def coarseCellsMemo(cacheKey: Option[String], tag: String)(
-      build: => DataFrame): DataFrame = cacheKey match {
-    case Some(k) if coarseMemoEnabled =>
-      val df = build
-      SessionMemos.arm(df.sparkSession)
-      coarseCellsCache.getOrElseUpdate((df.sparkSession, s"$k#$tag"),
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    case _ => build
-  }
+  private def coarseCellsMemo(spark: SparkSession, cacheKey: Option[String], tag: String)(
+      build: => DataFrame): DataFrame =
+    coarseCells(spark, cacheKey.map(k => s"$k#$tag"))(build)
 
   private def ivfTopKIntImpl(
       emb: DataFrame, nprobe: Int, labelValue: Option[Int], nCells: Int,
@@ -438,7 +410,7 @@ object AnnPack {
       .groupBy(col("vec_id"), col("cid"))
       .agg(sum((col("q") - col("cq")) * (col("q") - col("cq"))).as("d2"))
     val wAssign = Window.partitionBy("vec_id").orderBy(col("d2"), col("cid"))
-    val cells = coarseCellsMemo(cacheKey, s"int8cells$nCells") {
+    val cells = coarseCellsMemo(emb.sparkSession, cacheKey, s"int8cells$nCells") {
       d2Of(el).withColumn("rn", row_number().over(wAssign))
         .filter(col("rn") === 1)
         .select(col("vec_id"), col("cid").as("cell"))
@@ -475,116 +447,14 @@ object AnnPack {
       .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"))
   }
 
-  private val dimCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Int]
+  private val dims = SessionMemo.plain[String, Int]("ann.dim")(SessionMemo.tableOf)
 
   /** Memoized embedding dimensionality (one single-row action) — the
     * RHP plane array is generated at plan time, so the dimension must be
     * known before the job runs; same memo discipline as [[corpusCount]].
     */
-  private def dimOf(emb: DataFrame, cacheKey: Option[String]): Int = {
-    def probe(): Int = emb.select(size(col("embedding"))).head.getInt(0)
-    cacheKey match {
-      case Some(k) =>
-        SessionMemos.arm(emb.sparkSession)
-        dimCache.getOrElseUpdate((emb.sparkSession, k), probe())
-      case None => probe()
-    }
-  }
-
-  /** ADVICE r13 (medium): a corpus regenerated mid-session must not feed
-    * a persisted-index rebuild from memos pinned to the OLD files. The
-    * served entrypoints pin the corpus-directory fingerprint per
-    * (session, dir); on a mismatch every memo keyed by that corpus's
-    * path-derived cache keys is dropped — with its persisted /
-    * localCheckpoint backing released — BEFORE the rebuild derives
-    * artifacts, so a new index version always re-derives from the
-    * current files (and in-session entries over the same key rebuild
-    * fresh too).
-    */
-  private val corpusFpPins =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
-  private[graft] def invalidateStaleCorpusMemos(
-      spark: SparkSession, dir: String, fp: String): Unit = {
-    SessionMemos.arm(spark)
-    corpusFpPins.put((spark, dir), fp) match {
-      case Some(old) if old != fp => clearCorpusKeyMemos(spark, s"$dir/embeddings")
-      case _ => ()
-    }
-  }
-
-  private def clearCorpusKeyMemos(session: SparkSession, prefix: String): Unit = {
-    def hit(s: SparkSession, k: String) = (s eq session) && k.startsWith(prefix)
-    dimCache.filterInPlace { case ((s, k), _) => !hit(s, k) }
-    countCache.filterInPlace { case ((s, k), _) => !hit(s, k) }
-    cellsCache.filterInPlace { case ((s, k, _), _) => !hit(s, k) }
-    coarseCellsCache.filterInPlace { case ((s, k), df) =>
-      if (hit(s, k)) { SessionMemos.safeUnpersist(df); false } else true
-    }
-    pqCodebookCache.filterInPlace { case ((s, k), df) =>
-      if (hit(s, k)) { SessionMemos.safeUnpersist(df); false } else true
-    }
-    pairsCache.filterInPlace { case ((s, k, _, _), df) =>
-      if (hit(s, k)) { SessionMemos.safeUnpersist(df); false } else true
-    }
-    pqIdxCache.filterInPlace { case ((s, k), (embC, el, _, codes)) =>
-      if (hit(s, k)) {
-        SessionMemos.safeUnpersist(el); SessionMemos.safeUnpersist(codes)
-        SessionMemos.releaseCheckpoints(embC)
-        false
-      } else true
-    }
-    pqCodesArrCache.filterInPlace { case ((s, k), df) =>
-      if (hit(s, k)) { SessionMemos.safeUnpersist(df); false } else true
-    }
-    bruteCache.filterInPlace { case ((s, k), df) =>
-      if (hit(s, k)) { SessionMemos.releaseCheckpoints(df); false } else true
-    }
-  }
-
-  // Lifecycle (r10 verdict #5): every cache in this object joins the
-  // session-scoped eviction registry; the registration runs at object
-  // init, strictly before any cache can be populated.
-  SessionMemos.registerEvictor { dead =>
-    corpusFpPins.filterInPlace { case ((s, _), _) => !dead(s) }
-    dimCache.filterInPlace { case ((s, _), _) => !dead(s) }
-    countCache.filterInPlace { case ((s, _), _) => !dead(s) }
-    cellsCache.filterInPlace { case ((s, _, _), _) => !dead(s) }
-    coarseCellsCache.filterInPlace { case ((s, _), df) =>
-      if (dead(s)) { SessionMemos.safeUnpersist(df); false } else true
-    }
-    pqCodebookCache.filterInPlace { case ((s, _), df) =>
-      if (dead(s)) { SessionMemos.safeUnpersist(df); false } else true
-    }
-    pairsCache.filterInPlace { case ((s, _, _, _), df) =>
-      if (dead(s)) { SessionMemos.safeUnpersist(df); false } else true
-    }
-    pqIdxCache.filterInPlace { case ((s, _), (embC, el, _, codes)) =>
-      if (dead(s)) {
-        SessionMemos.safeUnpersist(el); SessionMemos.safeUnpersist(codes)
-        SessionMemos.releaseCheckpoints(embC)
-        false
-      } else true
-    }
-    pqCodesArrCache.filterInPlace { case ((s, _), df) =>
-      if (dead(s)) { SessionMemos.safeUnpersist(df); false } else true
-    }
-  }
-
-  /** Test accessor: memo entries held for `session` across this object's
-    * caches (the lifecycle spec asserts 0 after [[SessionMemos.evict]]).
-    */
-  private[graft] def memoEntriesFor(session: SparkSession): Int =
-    dimCache.keysIterator.count(_._1 eq session) +
-      countCache.keysIterator.count(_._1 eq session) +
-      cellsCache.keysIterator.count(_._1 eq session) +
-      coarseCellsCache.keysIterator.count(_._1 eq session) +
-      pqCodebookCache.keysIterator.count(_._1 eq session) +
-      pairsCache.keysIterator.count(_._1 eq session) +
-      pqIdxCache.keysIterator.count(_._1 eq session) +
-      pqCodesArrCache.keysIterator.count(_._1 eq session) +
-      bruteCache.keysIterator.count(_._1 eq session)
+  private def dimOf(emb: DataFrame, cacheKey: Option[String]): Int =
+    dims(emb.sparkSession, cacheKey)(emb.select(size(col("embedding"))).head.getInt(0))
 
   /** e07 — approximate top-k via random-hyperplane LSH (Charikar
     * STOC'02), the bucketed alternative to e02's IVF: no codebook and no
@@ -719,24 +589,19 @@ object AnnPack {
     * the memo just hands the same DataFrame back — the probe/pairs memo
     * discipline applied to training.
     */
-  private val pqCodebookCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val pqCodebooks =
+    SessionMemo.plain[String, DataFrame]("ann.pq_codebook")(SessionMemo.tableOf)
 
   private[graft] def pqTrainCodebook(
       emb: DataFrame, dim: Int,
       subDim: Int = PqSubDim, kc: Int = PqCentroids,
       iters: Int = PqKmIters,
-      cacheKey: Option[String] = None): DataFrame = cacheKey match {
-    case Some(k) =>
-      SessionMemos.arm(emb.sparkSession)
-      // EVERY training parameter is part of the memo key — a keyed call
-      // with a different dim/subDim/kc/iters must never be handed a
-      // codebook trained under other parameters (r10 advice #1)
-      pqCodebookCache.getOrElseUpdate(
-        (emb.sparkSession, s"$k#$dim/$subDim/$kc/$iters"),
-        pqTrainCodebook(emb, dim, subDim, kc, iters, None))
-    case None => trainCodebook(emb, dim, subDim, kc, iters)
-  }
+      cacheKey: Option[String] = None): DataFrame =
+    // EVERY training parameter is part of the memo key — a keyed call
+    // with a different dim/subDim/kc/iters must never be handed a
+    // codebook trained under other parameters (r10 advice #1)
+    pqCodebooks(emb.sparkSession, cacheKey.map(k => s"$k#$dim/$subDim/$kc/$iters"))(
+      trainCodebook(emb, dim, subDim, kc, iters))
 
   private def trainCodebook(
       emb: DataFrame, dim: Int,
@@ -797,16 +662,22 @@ object AnnPack {
     * once, serve from it" contract PLANS.md §21 describes — the
     * jacPairs/pqTrainCodebook memo discipline applied to encoding. The
     * key folds every geometry parameter plus the caller's codebook tag
-    * (r10 advice #1); el and codes persist MEMORY_AND_DISK and are
-    * unpersisted by [[clearPqIdxMemo]] / session eviction.
+    * (r10 advice #1). el and codes persist MEMORY_AND_DISK; on release
+    * they are unpersisted and the pinned corpus checkpoint, whose
+    * blocks live at the RDD level, is released.
     */
-  private val pqIdxCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame, DataFrame, DataFrame)]
-
-  /** Test hook (the pairMemo discipline): plan-shape specs need the
-    * un-cached join tree, not an InMemoryTableScan.
-    */
-  @volatile private[graft] var pqIdxMemoEnabled = true
+  private[graft] val pqIndexes =
+    new SessionMemo[String, (DataFrame, DataFrame, DataFrame, DataFrame)](
+      "ann.pq_index", SessionMemo.tableOf,
+      { case (embC, el, cb, codes) =>
+        // el is read again per entry (distance tables, e10's coarse
+        // stage); codes is the expensive product. CacheManager
+        // substitutes the persisted el into codes' plan on execution.
+        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+        (embC, el.persist(lvl), cb, codes.persist(lvl)) },
+      { case (embC, el, _, codes) =>
+        SessionMemos.safeUnpersist(el); SessionMemos.safeUnpersist(codes)
+        SessionMemos.releaseCheckpoints(embC) })
 
   /** Per-vector code VECTORS — `cd[m] = cid`, the array form of the code
     * table (r17, guide §2.3/§2.4): the ADC scan used to fan every code
@@ -817,23 +688,15 @@ object AnnPack {
     * in-projection `aggregate(zip_with(cd, dq, ...))` — integer adds over
     * array lookups, NO per-subspace shuffle at all. Long addition is
     * exact and order-free, so ADC scores (and everything ranked from
-    * them) are bit-identical. Memo keyed like [[pqIdxCache]] + "#arr".
+    * them) are bit-identical. Memo keyed like [[pqIndexes]] + "#arr".
     */
-  private val pqCodesArrCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private[graft] val pqCodeArrays =
+    SessionMemo.persisted[String]("ann.pq_code_arrays")(SessionMemo.tableOf)
 
-  private def pqCodesArr(codes: DataFrame, fullKey: Option[String]): DataFrame = {
-    def build = codes.groupBy(col("vec_id"))
+  private def pqCodesArr(codes: DataFrame, fullKey: Option[String]): DataFrame =
+    pqCodeArrays(codes.sparkSession, fullKey)(codes.groupBy(col("vec_id"))
       .agg(array_sort(collect_list(struct(col("m"), col("cid")))).as("pm"))
-      .select(col("vec_id"), expr("transform(pm, x -> x.cid)").as("cd"))
-    fullKey match {
-      case Some(k) if pqIdxMemoEnabled =>
-        SessionMemos.arm(codes.sparkSession)
-        pqCodesArrCache.getOrElseUpdate((codes.sparkSession, k),
-          build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      case _ => build
-    }
-  }
+      .select(col("vec_id"), expr("transform(pm, x -> x.cid)").as("cd")))
 
   /** The distance table as one row per query: `dq[m][cid] = dq2` (dense
     * by construction — every (m, cid) exists for every query). Tiny
@@ -853,25 +716,6 @@ object AnnPack {
   private val adcLookup: Column =
     expr("aggregate(zip_with(cd, dq, (c, d) -> d[CAST(c AS INT)]), 0L, (acc, x) -> acc + x)")
 
-  private[graft] def clearPqIdxMemo(session: SparkSession): Unit = {
-    pqIdxCache.filterInPlace { case ((s, _), (embC, el, _, codes)) =>
-      if (s eq session) {
-        el.unpersist(blocking = true); codes.unpersist(blocking = true)
-        // the pinned corpus is a localCheckpoint — its blocks live at the
-        // RDD level, invisible to Dataset.unpersist (ADVICE r12)
-        SessionMemos.releaseCheckpoints(embC)
-        false
-      } else true
-    }
-    pqCodesArrCache.filterInPlace { case ((s, _), df) =>
-      if (s eq session) { df.unpersist(blocking = true); false } else true
-    }
-    // coarse-cells memos recompute THROUGH the checkpoints just released
-    // (ADVICE r13): drop them too, so no live memo outlives a lineage it
-    // can no longer rebuild from after block loss
-    clearCoarseMemo(session)
-  }
-
   /** `cbTag` distinguishes codebook PROVENANCE in the memo key ("md5" /
     * "trained"); callers passing an explicit codebook must pass a tag
     * that uniquely identifies it for the cacheKey's corpus — the trained
@@ -881,24 +725,10 @@ object AnnPack {
       emb: DataFrame, dim: Int, subDim: Int, kc: Int,
       codebook: Option[DataFrame], cbTag: String,
       cacheKey: Option[String]): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    def build(persist: Boolean): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    pqIndexes(emb.sparkSession, cacheKey.map(k => s"$k#$dim/$subDim/$kc/$cbTag")) {
       val embC = emb.localCheckpoint()
-      val (el0, cb, codes0) = pqIndex(embC, dim, subDim, kc, codebook)
-      if (!persist) (embC, el0, cb, codes0)
-      else {
-        // el is read again per entry (distance tables, e10's coarse
-        // stage); codes is the expensive product. CacheManager
-        // substitutes the persisted el into codes' plan on execution.
-        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        (embC, el0.persist(lvl), cb, codes0.persist(lvl))
-      }
-    }
-    cacheKey match {
-      case Some(k) if pqIdxMemoEnabled =>
-        SessionMemos.arm(emb.sparkSession)
-        pqIdxCache.getOrElseUpdate(
-          (emb.sparkSession, s"$k#$dim/$subDim/$kc/$cbTag"), build(persist = true))
-      case _ => build(persist = false)
+      val (el, cb, codes) = pqIndex(embC, dim, subDim, kc, codebook)
+      (embC, el, cb, codes)
     }
   }
 
@@ -983,7 +813,7 @@ object AnnPack {
       .groupBy(col("vec_id"), col("ccid"))
       .agg(sum((col("q") - col("ccq")) * (col("q") - col("ccq"))).as("d2"))
     val wA = Window.partitionBy("vec_id").orderBy(col("d2"), col("ccid"))
-    val cells = coarseCellsMemo(cacheKey, s"pqcoarse$nCells") {
+    val cells = coarseCellsMemo(el.sparkSession, cacheKey, s"pqcoarse$nCells") {
       d2Of(el).withColumn("rn", row_number().over(wA))
         .filter(col("rn") === 1)
         .select(col("vec_id"), col("ccid").as("cell"))
@@ -1121,9 +951,6 @@ object AnnPack {
     import graft.sources.AnnIndex
     val path = s"$indexRoot/${dir.replaceAll("[^A-Za-z0-9._-]", "_")}_ivfpq"
     val rawFp = graft.sources.SignatureIndex.dirFingerprint(s"$dir/embeddings.parquet")
-    // stale-memo coherence (ADVICE r13): a rebuild must derive from the
-    // CURRENT files, never from memos of a mid-session-regenerated corpus
-    invalidateStaleCorpusMemos(spark, dir, rawFp)
     val fp = rawFp + s"#ivfpq/$PqSubDim/$PqCentroids/md5/pc3" // /pc3: pcell layout (256KB dir target) (incl. vectors)
     val t = AnnIndex.ensure(spark, ivfPqArtifacts(spark, dir), path, fp)
     serveIvfPqFrom(t, nprobe, shortlist)
@@ -1154,14 +981,7 @@ object AnnPack {
     // cost ~0.7s of every warm e12/e13/e14 pass at sf1 (r15 verdict #1).
     val spark = t.vectors.sparkSession
     import spark.implicits._
-    val (qRows, probePairs) = servedQueryBatchCache.getOrElseUpdate(
-      (spark, t.path, t.version, nprobe), {
-        SessionMemos.arm(spark)
-        // a publish superseded any older version's batch — drop it so a
-        // long-lived session maintaining many batches stays O(indexes)
-        servedQueryBatchCache.filterInPlace { case ((s, p, v, _), _) =>
-          !((s eq spark) && p == t.path && v != t.version)
-        }
+    val (qRows, probePairs) = servedQueryBatches(spark, Some((t.path, t.version, nprobe))) {
         val rows = t.vectors.filter(col("vec_id") < NumQueries)
           .select(col("vec_id"), col("embedding"))
           .as[(Long, Seq[Float])].collect().toSeq
@@ -1177,7 +997,7 @@ object AnnPack {
           .select(col("q_id"), col("ccid").as("cell"))
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
         (rows, pairs)
-      })
+      }
     val qVecs = broadcast(qRows.toDF("vec_id", "embedding"))
     val qel = int8Quantize(qVecs)
       .select(col("vec_id").as("q_id"), col("dim").as("d"), col("q"),
@@ -1213,16 +1033,12 @@ object AnnPack {
     // batch) and bounded by the same contract that lets it broadcast —
     // a warm pass re-broadcasts the pinned rows instead of re-running
     // the codebook join + shuffle aggregate.
-    val (dtRows, dtSchema) = servedDtCache.getOrElseUpdate(
-      (spark, t.path, t.version), {
-        servedDtCache.filterInPlace { case ((s, p, v), _) =>
-          !((s eq spark) && p == t.path && v != t.version)
-        }
+    val (dtRows, dtSchema) = servedDts(spark, Some((t.path, t.version))) {
         val d = qel.join(t.codebook, Seq("m", "d"))
           .groupBy(col("q_id"), col("m"), col("cid"))
           .agg(sum((col("q") - col("cq")) * (col("q") - col("cq"))).as("dq2"))
         (d.collect(), d.schema)
-      })
+      }
     val dt = broadcast(spark.createDataFrame(
       java.util.Arrays.asList(dtRows.toIndexedSeq: _*), dtSchema))
     // per-(q_id, vec_id) ADC sums, one join leg per code layout (r16
@@ -1338,7 +1154,6 @@ object AnnPack {
     val path = s"$indexRoot/${dir.replaceAll("[^A-Za-z0-9._-]", "_")}" +
       s"_ivfpq_m${deltaMod}r$deltaRes$pathTag"
     val rawFp = graft.sources.SignatureIndex.dirFingerprint(s"$dir/embeddings.parquet")
-    invalidateStaleCorpusMemos(spark, dir, rawFp) // ADVICE r13 coherence
     val fp = rawFp +
       s"#ivfpq-base/$PqSubDim/$PqCentroids/md5/m${deltaMod}r$deltaRes/pc3"
     val t0 = AnnIndex.ensure(spark,
@@ -1390,7 +1205,6 @@ object AnnPack {
     val path = s"$indexRoot/${dir.replaceAll("[^A-Za-z0-9._-]", "_")}" +
       s"_ivfpq_retrain_m$baseMod"
     val rawFp = graft.sources.SignatureIndex.dirFingerprint(s"$dir/embeddings.parquet")
-    invalidateStaleCorpusMemos(spark, dir, rawFp) // ADVICE r13 coherence
     val fpFinal = rawFp +
       s"#ivfpq-retrained/$PqSubDim/$PqCentroids/md5/m$baseMod/pc3"
     def retrained = AnnIndex.readFingerprint(path).contains(fpFinal)
@@ -1813,19 +1627,13 @@ object AnnPack {
     */
   private[graft] final case class CellChoice(cells: Int, prunable: Boolean)
 
-  private val cellsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Double), CellChoice]
-  private val countCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
+  private val cellChoices = SessionMemo.plain[(String, Double), CellChoice]("ann.cells")(
+    k => SessionMemo.tableOf(k._1))
+  private val counts = SessionMemo.plain[String, Long]("ann.count")(SessionMemo.tableOf)
 
   /** Memoized `df.count()` for a stable named corpus (see [[chooseCells]]). */
   private def corpusCount(emb: DataFrame, cacheKey: Option[String]): Long =
-    cacheKey match {
-      case Some(k) =>
-        SessionMemos.arm(emb.sparkSession)
-        countCache.getOrElseUpdate((emb.sparkSession, k), emb.count())
-      case None => emb.count()
-    }
+    counts(emb.sparkSession, cacheKey)(emb.count())
 
   private[graft] def chooseCellsDetailed(
       emb: DataFrame, threshold: Double, cacheKey: Option[String] = None): CellChoice = {
@@ -1851,12 +1659,7 @@ object AnnPack {
           prunable = partners < 0.5 * c0)
       }
     }
-    cacheKey match {
-      case Some(k) =>
-        SessionMemos.arm(emb.sparkSession)
-        cellsCache.getOrElseUpdate((emb.sparkSession, k, threshold), probe())
-      case None => probe()
-    }
+    cellChoices(emb.sparkSession, cacheKey.map((_, threshold)))(probe())
   }
 
   private[graft] def chooseCells(
@@ -1976,26 +1779,8 @@ object AnnPack {
     * e04/e04b/d26 share one scan. Keyless or numCells-pinned calls
     * (tests, probes) never touch the memo.
     */
-  private val pairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Double, Int), DataFrame]
-
-  /** Test hook: with the memo off, keyed calls build plain (uncached)
-    * plans — plan-shape specs need to observe the join tree itself, and a
-    * persisted DataFrame prints as an in-memory scan even on its first
-    * execution.
-    */
-  @volatile private[graft] var pairMemoEnabled = true
-
-  /** Test hook companion: drop and UNPERSIST this session's memoized pair
-    * sets. Disabling the memo alone is not enough for plan-shape specs —
-    * the CacheManager substitutes any structurally-equal analyzed plan
-    * with the persisted relation, so a fresh DataFrame over the same
-    * corpus would still print as a cached scan until the cache is gone.
-    */
-  private[graft] def clearPairMemo(session: SparkSession): Unit =
-    pairsCache.filterInPlace { case ((s, _, _, _), df) =>
-      if (s eq session) { df.unpersist(blocking = true); false } else true
-    }
+  private[graft] val pairSets = SessionMemo.persisted[(String, Double, Int)]("ann.pairs")(
+    k => SessionMemo.tableOf(k._1))
 
   def cosineNearDupBlocked(
       emb: DataFrame,
@@ -2049,14 +1834,9 @@ object AnnPack {
     def compute(): DataFrame =
       if (!choice.prunable) computeFallback() else computeBlocked()
 
-    (numCells, cacheKey) match {
-      case (None, Some(k)) if pairMemoEnabled =>
-        val memoSalt = if (!choice.prunable) -1 else sameCellSalt
-        SessionMemos.arm(emb.sparkSession)
-        pairsCache.getOrElseUpdate((emb.sparkSession, k, threshold, memoSalt),
-          compute().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      case _ => compute()
-    }
+    val memoSalt = if (!choice.prunable) -1 else sameCellSalt
+    pairSets(emb.sparkSession, cacheKey.filter(_ => numCells.isEmpty).map((_, threshold, memoSalt)))(
+      compute())
   }
 
   /** Deterministically CLUSTERED + REPLICATED twin of the embeddings

@@ -398,9 +398,8 @@ object ExtensionsPack {
       import s.implicits._
       val timed = Tables.documents(s, dir)
         .select(timestamp_millis(col("doc_id") * 60000L).as("ts"), col("text"))
-      val fp = graft.sources.VersionedIndex.dirFingerprint(s"$dir/documents.parquet")
       val k = graft.streaming.PhraseStream.choosePairMinSupport(
-        timed, cacheKey = Some(s"$dir/documents@$fp#s10"))
+        timed, cacheKey = Some(PipelinePack.documentsKey(s, dir) + "#s10"))
       graft.streaming.PhraseStream.windowedPairCounts(
           timed.as[graft.streaming.PhraseStream.TimedDoc], minSupport = k)
         .orderBy("window_start", "l", "r")

@@ -141,32 +141,16 @@ object GraphPack {
     * same discipline as [[GraphTables.forDir]] memoizing the signal-log
     * graph build: the fixture IS g22c/g22d's input table, and deriving
     * it anew on every pass cost a measured ~0.6s 64-task stage per pass.
-    * Each entry pins the fingerprint of the `events.parquet` its node
-    * count came from; a regenerated event log releases it and derives
-    * the fixture again.
+    * Each entry derives from the `events.parquet` its node count came
+    * from; a regenerated event log supersedes it and the fixture is
+    * derived again.
     */
-  private val plCache = scala.collection.concurrent.TrieMap.empty[
-    (org.apache.spark.sql.SparkSession, String), (String, org.apache.spark.sql.DataFrame)]
-
-  graft.SessionMemos.registerEvictor { dead =>
-    plCache.filterInPlace { case ((s, _), (_, df)) =>
-      if (dead(s)) { graft.SessionMemos.releaseCheckpoints(df); false } else true
-    }
-  }
+  private val powerLaw = graft.SessionMemo.checkpointed[String]("graph_pack.power_law")(
+    dir => Seq(graft.SessionMemo.Input.file(s"$dir/events.parquet")))
 
   private[graft] def powerLawEdgesMemo(
-      s: org.apache.spark.sql.SparkSession, dir: String) = {
-    graft.SessionMemos.arm(s)
-    val fp = graft.sources.VersionedIndex.dirFingerprint(s"$dir/events.parquet")
-    plCache.get((s, dir)) match {
-      case Some((`fp`, df)) => df
-      case stale =>
-        stale.foreach { case (_, df) => graft.SessionMemos.releaseCheckpoints(df) }
-        val df = powerLawEdges(s, dir).localCheckpoint()
-        plCache.put((s, dir), (fp, df))
-        df
-    }
-  }
+      s: org.apache.spark.sql.SparkSession, dir: String) =
+    powerLaw(s, Some(dir))(powerLawEdges(s, dir))
 
   val defs: Seq[QDef] = Seq(
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QDef, SessionMemos, Tables}
+import graft.{QDef, SessionMemo, SessionMemos, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -182,18 +182,12 @@ object PipelinePack {
     // OR-fold, insertion-order-free by construction (see above) — yet it
     // was rebuilt by two eager jobs (count + aggregate over every eval
     // gram) on every call. Memoize the serialized bytes per (session,
-    // corpus key) under the standard evictor discipline, exactly like the
+    // corpus key) as a session memo, exactly like the
     // recall floors' ground-truth memo. The DECLARED legs (n_train,
     // exact containment, the flagged probe) stay fresh in the plan below.
     def buildBf(): Array[Byte] = graft.functions.BloomProbe.serialize(
       evG.stat.bloomFilter("g", math.max(evG.count(), 1L), fpp))
-    val bfBytes = cacheKey match {
-      case Some(k) =>
-        SessionMemos.arm(spark)
-        bloomBytesCache.getOrElseUpdate(
-          (spark, s"$k#n$n/m$evalMod/fpp$fpp"), buildBf())
-      case None => buildBf()
-    }
+    val bfBytes = bloomBytes(spark, cacheKey.map(k => s"$k#n$n/m$evalMod/fpp$fpp"))(buildBf())
     val trDocs = tr.select("doc_id").distinct()
     val exact = tr.join(evG, Seq("g"), "left_semi").select("doc_id").distinct()
       .withColumn("is_exact", lit(1))
@@ -248,28 +242,13 @@ object PipelinePack {
     * asset (bucketed by (band, sig), appended as ingest batches commit),
     * and full-corpus dedup (d03), incremental ingest (d32) and the
     * streaming dedup entries' signature legs (s07/s08) all read the SAME
-    * index instead of re-minhashing the corpus per consumer. Standard
-    * memo lifecycle: persisted MEMORY_AND_DISK, evictor-registered,
-    * memo-off hook so plan pins observe the real join tree.
+    * index instead of re-minhashing the corpus per consumer.
     */
-  private val bandSigCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  @volatile private[graft] var sigMemoEnabled = true
-
-  private[graft] def clearSigMemo(session: SparkSession): Unit =
-    bandSigCache.filterInPlace { case ((s, _), df) =>
-      if (s eq session) { df.unpersist(blocking = true); false } else true
-    }
+  private[graft] val bandSigs = SessionMemo.persisted[String]("pipeline.band_sigs")(SessionMemo.tableOf)
 
   private[graft] def bandSignaturesMemo(
-      docs: DataFrame, cacheKey: Option[String]): DataFrame = cacheKey match {
-    case Some(k) if sigMemoEnabled =>
-      SessionMemos.arm(docs.sparkSession)
-      bandSigCache.getOrElseUpdate((docs.sparkSession, k), bandSignatures(docs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    case _ => bandSignatures(docs)
-  }
+      docs: DataFrame, cacheKey: Option[String]): DataFrame =
+    bandSigs(docs.sparkSession, cacheKey)(bandSignatures(docs))
 
   /** The LSH candidate stage of [[nearDupPairs]]: distinct (doc_i, doc_j)
     * pairs sharing any band signature. Exposed (like AnnPack's
@@ -760,14 +739,13 @@ object PipelinePack {
     // r18: the eval-gram table is REFERENCE data — a pure function of
     // the benchmark slice, bounded by it (benchmark-sized whatever the
     // corpus), and identical for every arriving batch — so it memoizes
-    // per (session, corpus) under the standard evictor discipline (the
+    // per (session, corpus) as a session memo (the
     // d22 bloom-bytes / recall-floor ground-truth pattern); the DELTA's
     // gram explode and the containment semi-join stay fresh per pass.
-    val evalG = evalGramsCache.getOrElseUpdate(
-      (spark, documentsKey(spark, dir) + s"#evalgrams5/m$deltaMod/e$evalRes"),
+    val evalG = evalGrams(spark,
+        Some(documentsKey(spark, dir) + s"#evalgrams5/m$deltaMod/e$evalRes"))(
       grams(docs.filter(isEval), 5)
-        .select(xxhash64(col("g")).as("g")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select(xxhash64(col("g")).as("g")).distinct())
     val contaminated = grams(delta, 5)
       .select(col("doc_id"), xxhash64(col("g")).as("g"))
       .join(evalG, Seq("g"), "left_semi")
@@ -873,84 +851,27 @@ object PipelinePack {
     * `capEngageFactor`); same (session, key) memo pattern as
     * AnnPack.chooseCells and GraphTables.forDir.
     */
-  private val maxDfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
+  private val maxDfs = SessionMemo.plain[String, Long]("pipeline.max_df")(SessionMemo.tableOf)
 
-  /** d22's serialized eval-gram Bloom filter per (session, corpus key) —
-    * plain bytes, no persisted blocks, so eviction needs no unpersist.
-    */
-  private val bloomBytesCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Array[Byte]]
+  /** d22's serialized eval-gram Bloom filter per (session, corpus key). */
+  private val bloomBytes =
+    SessionMemo.plain[String, Array[Byte]]("pipeline.bloom_bytes")(SessionMemo.tableOf)
 
-  /** d37's hashed distinct eval-gram table per (session, corpus key) —
-    * persisted reference data, bandSigCache lifecycle.
-    */
-  private val evalGramsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** The `documents.parquet` fingerprint each (session, dir)'s
-    * `"$dir/documents"`-keyed memos were built from.
-    */
-  private val documentsFpPins =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  /** d37's hashed distinct eval-gram table per (session, corpus key). */
+  private val evalGrams = SessionMemo.persisted[String]("pipeline.eval_grams")(SessionMemo.tableOf)
 
   /** The memo key of `dir`'s documents corpus: `"$dir/documents"`, to
-    * which callers append their own suffix after `#`. Each call pins the
-    * corpus fingerprint, the [[AnnPack.invalidateStaleCorpusMemos]]
-    * discipline: when `documents.parquet` changed since the last call in
-    * this session, every memo of this pack keyed under the corpus is
-    * dropped first, releasing what it persisted or checkpointed, so the
-    * caller rebuilds it from the current rows.
+    * which callers append their own suffix after `#`. Each call checks
+    * the corpus fingerprint: when `documents.parquet` changed since the
+    * entries of this session were built, every one derived from it is
+    * dropped first ([[SessionMemos.supersede]]), releasing what it
+    * pinned, so the caller rebuilds it from the current rows.
     */
   private[graft] def documentsKey(spark: SparkSession, dir: String): String = {
     val key = s"$dir/documents"
-    val fp = graft.sources.VersionedIndex.dirFingerprint(s"$dir/documents.parquet")
-    SessionMemos.arm(spark)
-    if (documentsFpPins.put((spark, dir), fp).exists(_ != fp))
-      evictWhere((s, k) => (s eq spark) && (k == key || k.startsWith(s"$key#")))
+    SessionMemo.tableOf(key).foreach(SessionMemos.supersede(spark, _))
     key
   }
-
-  /** Drop every memo entry whose (session, key) matches, releasing the
-    * persisted blocks and checkpoints it pinned.
-    */
-  private def evictWhere(hit: (SparkSession, String) => Boolean): Unit = {
-    maxDfCache.filterInPlace { case ((s, k), _) => !hit(s, k) }
-    bloomBytesCache.filterInPlace { case ((s, k), _) => !hit(s, k) }
-    evalGramsCache.filterInPlace { case ((s, k), df) =>
-      if (hit(s, k)) { SessionMemos.safeUnpersist(df); false } else true
-    }
-    minDfCache.filterInPlace { case ((s, k, _), _) => !hit(s, k) }
-    bandSigCache.filterInPlace { case ((s, k), df) =>
-      if (hit(s, k)) { SessionMemos.safeUnpersist(df); false } else true
-    }
-    jacPairsCache.filterInPlace { case ((s, k, _, _), df) =>
-      if (hit(s, k)) { SessionMemos.safeUnpersist(df); false } else true
-    }
-    phraseMergeCache.filterInPlace { case ((s, k, _), (a, b)) =>
-      if (hit(s, k)) {
-        SessionMemos.safeUnpersist(a); SessionMemos.safeUnpersist(b)
-        SessionMemos.releaseCheckpoints(a); SessionMemos.releaseCheckpoints(b)
-        false
-      } else true
-    }
-  }
-
-  // session-scoped eviction (r10 verdict #5); registered at object init,
-  // strictly before the cache can be populated
-  SessionMemos.registerEvictor { dead =>
-    documentsFpPins.filterInPlace { case ((s, _), _) => !dead(s) }
-    evictWhere((s, _) => dead(s))
-  }
-
-  private[graft] def memoEntriesFor(session: SparkSession): Int =
-    maxDfCache.keysIterator.count(_._1 eq session) +
-      bloomBytesCache.keysIterator.count(_._1 eq session) +
-      evalGramsCache.keysIterator.count(_._1 eq session) +
-      minDfCache.keysIterator.count(_._1 eq session) +
-      bandSigCache.keysIterator.count(_._1 eq session) +
-      jacPairsCache.keysIterator.count(_._1 eq session) +
-      phraseMergeCache.keysIterator.count(_._1 eq session)
 
   /** @param capEngageFactor when set (with `dfCap`), the cap engages ONLY
     * if the corpus's measured max shingle df exceeds `dfCap * factor` —
@@ -997,12 +918,7 @@ object PipelinePack {
       capEngageFactor.forall { factor =>
         val probe = () => sh.groupBy("g").agg(count(lit(1)).as("df"))
           .agg(max(col("df"))).head.getLong(0)
-        val maxDf = cacheKey match {
-          case Some(k) =>
-            SessionMemos.arm(docs.sparkSession)
-            maxDfCache.getOrElseUpdate((docs.sparkSession, k), probe())
-          case None => probe()
-        }
+        val maxDf = maxDfs(docs.sparkSession, cacheKey)(probe())
         maxDf > cap * factor
       }
     }
@@ -1251,33 +1167,14 @@ object PipelinePack {
     * self-join is the family's dominant cost. Keyless calls (tests,
     * ad-hoc corpora) never touch the memo.
     */
-  private val jacPairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Double, Long), DataFrame]
-
-  /** Test hooks, same contract as AnnPack.pairMemoEnabled/clearPairMemo:
-    * plan-shape specs need the raw join tree, and the CacheManager would
-    * substitute any structurally-equal plan with the persisted relation.
-    */
-  @volatile private[graft] var jacMemoEnabled = true
-  private[graft] def clearJacMemo(session: SparkSession): Unit =
-    jacPairsCache.filterInPlace { case ((s, _, _, _), df) =>
-      if (s eq session) { df.unpersist(blocking = true); false } else true
-    }
+  private[graft] val jaccardPairs = SessionMemo.persisted[(String, Double, Long)](
+    "pipeline.jaccard_pairs")(k => SessionMemo.tableOf(k._1))
 
   private def jaccardPairsMemo(
       docs: DataFrame, threshold: Double, dfCap: Option[Long],
-      cacheKey: Option[String]): DataFrame = {
-    def compute(): DataFrame =
-      ngramJaccardPairs(docs, threshold, dfCap).select("doc_i", "doc_j")
-    cacheKey match {
-      case Some(k) if jacMemoEnabled =>
-        SessionMemos.arm(docs.sparkSession)
-        jacPairsCache.getOrElseUpdate(
-          (docs.sparkSession, k, threshold, dfCap.getOrElse(-1L)),
-          compute().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      case _ => compute()
-    }
-  }
+      cacheKey: Option[String]): DataFrame =
+    jaccardPairs(docs.sparkSession, cacheKey.map((_, threshold, dfCap.getOrElse(-1L))))(
+      ngramJaccardPairs(docs, threshold, dfCap).select("doc_i", "doc_j"))
 
   /** d27 — the per-shard greedy packer: token-offset cumsum windowed by
     * the shard key, bins = 2048-token spans of the stream. See the QDef
@@ -1412,7 +1309,7 @@ object PipelinePack {
   }
 
   /** Memoized [[phraseMerge]] per (session, corpus key, rounds) — the
-    * jacPairsCache discipline applied to the induction loop (r11 verdict
+    * [[jaccardPairs]] discipline applied to the induction loop (r11 verdict
     * #2): d30, d30b and d30c all consume the SAME loop's two outputs
     * (merged corpus, merge table) in one bench/verify process, and the
     * loop is the family's entire cost (3 corpus-wide pair-count shuffles
@@ -1420,35 +1317,22 @@ object PipelinePack {
     * stores the pair; keyless calls (tests, ad-hoc corpora) never touch
     * it.
     */
-  private val phraseMergeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), (DataFrame, DataFrame)]
-
-  /** Test hooks, same contract as [[jacMemoEnabled]]/[[clearJacMemo]]. */
-  @volatile private[graft] var phraseMemoEnabled = true
-  private[graft] def clearPhraseMemo(session: SparkSession): Unit =
-    phraseMergeCache.filterInPlace { case ((s, _, _), (a, b)) =>
-      if (s eq session) {
-        SessionMemos.safeUnpersist(a); SessionMemos.safeUnpersist(b)
-        // the induction loop's last-round localCheckpoints back both
-        // outputs' plans at the RDD level (ADVICE r12)
-        SessionMemos.releaseCheckpoints(a); SessionMemos.releaseCheckpoints(b)
-        false
-      } else true
-    }
+  private val phraseMerges = new SessionMemo[(String, Int), (DataFrame, DataFrame)](
+    "pipeline.phrase_merge", k => SessionMemo.tableOf(k._1),
+    { case (merged, table) =>
+      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+      (merged.persist(lvl), table.persist(lvl)) },
+    // the induction loop's last-round localCheckpoints back both
+    // outputs' plans at the RDD level
+    { case (merged, table) =>
+      Seq(merged, table).foreach { df =>
+        SessionMemos.safeUnpersist(df); SessionMemos.releaseCheckpoints(df)
+      } })
 
   def phraseMergeMemo(
       docs: DataFrame, rounds: Int = 3,
       cacheKey: Option[String] = None): (DataFrame, DataFrame) =
-    cacheKey match {
-      case Some(k) if phraseMemoEnabled =>
-        SessionMemos.arm(docs.sparkSession)
-        phraseMergeCache.getOrElseUpdate((docs.sparkSession, k, rounds), {
-          val (merged, table) = phraseMerge(docs, rounds)
-          (merged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-            table.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        })
-      case _ => phraseMerge(docs, rounds)
-    }
+    phraseMerges(docs.sparkSession, cacheKey.map((_, rounds)))(phraseMerge(docs, rounds))
 
   /** d30c — the APPLY PASS of phrase-merge: the operator a tokenizer
     * pipeline actually runs at 100 TB. The induction loop
@@ -1639,8 +1523,8 @@ object PipelinePack {
     */
   private val MinDfLadder = Seq(5L, 50L, 500L, 5000L, 50000L)
 
-  private val minDfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Long), Long]
+  private val minDfs = SessionMemo.plain[(String, Long), Long]("pipeline.min_df")(
+    k => SessionMemo.tableOf(k._1))
 
   private[graft] def chooseMinDf(
       docs: DataFrame, vocabBudget: Long = 1000000L,
@@ -1656,12 +1540,7 @@ object PipelinePack {
         .collectFirst { case (k, i) if sizes.getLong(i) <= vocabBudget => k }
         .getOrElse(MinDfLadder.last)
     }
-    cacheKey match {
-      case Some(k) =>
-        SessionMemos.arm(docs.sparkSession)
-        minDfCache.getOrElseUpdate((docs.sparkSession, k, vocabBudget), probe())
-      case None => probe()
-    }
+    minDfs(docs.sparkSession, cacheKey.map((_, vocabBudget)))(probe())
   }
 
   def tokenQualityClassifier(docs: DataFrame, minDf: Long = 5L): DataFrame = {

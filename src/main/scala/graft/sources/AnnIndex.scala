@@ -6,8 +6,8 @@ import java.nio.file.Paths
 
 /** The ANN serving index as PERSISTED, versioned tables — the index/serve
   * split for the IVF-PQ family (r12 verdict #2): e10's codes + codebook
-  * and the coarse cell assignments were session memos (`pqIdxCache`,
-  * `cellsCache`), so every fresh session re-encoded the corpus before it
+  * and the coarse cell assignments were session memos (`pqIndexes`,
+  * `coarseCells`), so every fresh session re-encoded the corpus before it
   * could answer a query. A deployment builds the index ONCE per corpus
   * snapshot, keeps it CURRENT with delta appends as the vector corpus
   * grows (r14 verdict #2 — the maintenance leg [[SignatureIndex]] already
@@ -521,32 +521,21 @@ object AnnIndex {
     * from the cheap catalog registration, so an in-progress build of the
     * next version never blocks serving this one.
     */
-  /** Served-table memo per (session, path): a serve of an unchanged
-    * committed version is pure map lookup. Keyed by the VERSION string,
-    * so any publish (append/compact/rebuild) naturally invalidates; the
-    * cached value is only immutable plan metadata (no persisted blocks),
-    * so eviction needs no unpersist. Without this, every serve re-ran
-    * partition discovery over the pcell=K directories of three tables —
-    * ~1s of driver listing per call at the 10x fixture.
+  /** Served-table memo per (session, path, committed version): a serve
+    * of an unchanged committed version is pure map lookup, and any
+    * publish (append/compact/rebuild) supersedes the older version's
+    * entry. The value is only immutable plan metadata (no persisted
+    * blocks), so dropping it releases nothing. Without this, every serve
+    * re-ran partition discovery over the pcell=K directories of three
+    * tables — ~1s of driver listing per call at the 10x fixture.
     */
-  private val serveCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, Served)]
-
-  graft.SessionMemos.registerEvictor { dead =>
-    serveCache.filterInPlace { case ((s, _), _) => !dead(s) }
-  }
+  private val served = graft.SessionMemo.plain[(String, String), Served]("ann_index.served")(
+    k => Seq(graft.SessionMemo.Input(k._1, k._2)))
 
   def serve(spark: SparkSession, path: String): Served = {
     val v = currentVersion(path).getOrElse(
       throw new IllegalStateException(s"ANN index not initialized: $path"))
-    serveCache.get((spark, canonicalServeKey(path))) match {
-      case Some((ver, t)) if ver == v => t
-      case _ =>
-        graft.SessionMemos.arm(spark)
-        val t = buildServed(spark, path, v)
-        serveCache.put((spark, canonicalServeKey(path)), (v, t))
-        t
-    }
+    served(spark, Some((canonicalServeKey(path), v)))(buildServed(spark, path, v))
   }
 
   private def canonicalServeKey(path: String): String =

@@ -51,25 +51,17 @@ object PhraseStream {
   /** The measured support ladder (see [[choosePairMinSupport]]). */
   private[graft] val PairSupportLadder = Seq(1L, 2L, 5L, 50L)
 
-  private val supportCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Long), Long]
-
-  graft.SessionMemos.registerEvictor { dead =>
-    supportCache.filterInPlace { case ((s, _, _), _) => !dead(s) }
-  }
-
-  /** The corpus keys this session's support memo holds. */
-  private[graft] def memoKeysFor(session: SparkSession): Set[String] =
-    supportCache.keysIterator.collect { case (s, k, _) if s eq session => k }.toSet
+  /** The measured support per (session, corpus key, budget). */
+  private val supports = graft.SessionMemo.plain[(String, Long), Long](
+    "phrase_stream.support")(k => graft.SessionMemo.tableOf(k._1))
 
   /** Measure the worst window's pair vocabulary at each ladder rung over
     * a BATCH slice (history or a sample — the stream is configured from
     * it, the d35 probe discipline) and return the smallest support whose
     * worst window fits `vocabBudget`. Two aggregates, memoized per
-    * (session, corpus key, budget). The key names the input snapshot (s10
-    * puts the `documents.parquet` fingerprint in it), so a rewritten
-    * corpus misses and is probed again; the superseded entry, one long,
-    * stays until the session is evicted.
+    * (session, corpus key, budget); the key names the table it derives
+    * from ([[graft.SessionMemo.tableOf]]), so a rewritten corpus
+    * supersedes the entry and is probed again.
     */
   private[graft] def choosePairMinSupport(
       docs: DataFrame, vocabBudget: Long = 1000000L,
@@ -93,12 +85,7 @@ object PhraseStream {
           if !worst.isNullAt(i) && worst.getLong(i) <= vocabBudget => k }
         .getOrElse(PairSupportLadder.last)
     }
-    cacheKey match {
-      case Some(k) =>
-        graft.SessionMemos.arm(docs.sparkSession)
-        supportCache.getOrElseUpdate((docs.sparkSession, k, vocabBudget), probe())
-      case None => probe()
-    }
+    supports(docs.sparkSession, cacheKey.map((_, vocabBudget)))(probe())
   }
 
   def windowedPairCounts(

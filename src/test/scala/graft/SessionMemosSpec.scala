@@ -21,7 +21,7 @@ class SessionMemosSpec extends AnyFunSuite {
         Tables.embeddings(s, dir), threshold = threshold,
         cacheKey = Some(s"$dir/embeddings")).collect()
     pairs(spark, 0.45)
-    val sharedEntries = queries.AnnPack.memoEntriesFor(spark)
+    val sharedEntries = SessionMemos.entries(spark, "ann")
     assert(sharedEntries > 0)
 
     // a second logical session on the same context builds its own memos.
@@ -35,25 +35,25 @@ class SessionMemosSpec extends AnyFunSuite {
     pairs(s2, 0.5)
     graph.GraphTables.commonNeighbors(graph.GraphTables.forDir(s2, dir),
       cacheKey = Some(s"$dir#und")).collect()
-    assert(queries.AnnPack.memoEntriesFor(s2) > 0)
-    assert(graph.GraphTables.memoEntriesFor(s2) === 2) // graph tables + undirected snapshot
+    assert(SessionMemos.entries(s2, "ann") > 0)
+    assert(SessionMemos.entries(s2, "graph_tables") === 2) // graph tables + undirected snapshot
     val pinned = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
     assert(pinned.nonEmpty)
 
     SessionMemos.evict(s2)
 
-    assert(queries.AnnPack.memoEntriesFor(s2) === 0)
-    assert(graph.GraphTables.memoEntriesFor(s2) === 0)
-    assert(queries.PipelinePack.memoEntriesFor(s2) === 0)
+    assert(SessionMemos.entries(s2, "ann") === 0)
+    assert(SessionMemos.entries(s2, "graph_tables") === 0)
+    assert(SessionMemos.entries(s2, "pipeline") === 0)
     // every RDD the second session pinned is gone again
     val survivors = spark.sparkContext.getPersistentRDDs.keySet.intersect(pinned)
     assert(survivors.isEmpty, s"RDDs still pinned after evict: $survivors")
     // and the shared session's memos are untouched
-    assert(queries.AnnPack.memoEntriesFor(spark) === sharedEntries)
+    assert(SessionMemos.entries(spark, "ann") === sharedEntries)
 
     // evicted ≠ broken: the next call recomputes and re-memoizes
     pairs(s2, 0.5)
-    assert(queries.AnnPack.memoEntriesFor(s2) > 0)
+    assert(SessionMemos.entries(s2, "ann") > 0)
     SessionMemos.evict(s2)
   }
 
@@ -63,23 +63,23 @@ class SessionMemosSpec extends AnyFunSuite {
     for (name <- Seq("g22_common_neighbors", "g21_triangle_counts"))
       queries.GraphPack.defs.find(_.name == name).get.run(s5, dir).collect()
     // graph tables, g22's undirected snapshot, g21's triangle table
-    assert(graph.GraphTables.memoEntriesFor(s5) === 3)
+    assert(SessionMemos.entries(s5, "graph_tables") === 3)
     val pinned = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
     assert(pinned.nonEmpty)
     // plus a BFS closure keyed on the dir's graph (its per-hop
     // checkpoints are not memo-owned, so it stays out of `pinned`)
     queries.GraphPack.defs.find(_.name == "g18b_traverse_dfs_validity").get.run(s5, dir).collect()
-    assert(graph.GraphTables.memoEntriesFor(s5) === 4)
+    assert(SessionMemos.entries(s5, "graph_tables") === 4)
 
     graph.GraphTables.invalidate(s5, dir)
 
-    assert(graph.GraphTables.memoEntriesFor(s5) === 0)
+    assert(SessionMemos.entries(s5, "graph_tables") === 0)
     val survivors = spark.sparkContext.getPersistentRDDs.keySet.intersect(pinned)
     assert(survivors.isEmpty, s"RDDs still pinned after invalidate: " +
       survivors.map(spark.sparkContext.getPersistentRDDs(_).toDebugString))
     // and the dir serves again, from a fresh build
     queries.GraphPack.defs.find(_.name == "g22_common_neighbors").get.run(s5, dir).collect()
-    assert(graph.GraphTables.memoEntriesFor(s5) === 2)
+    assert(SessionMemos.entries(s5, "graph_tables") === 2)
     SessionMemos.evict(s5)
   }
 
@@ -93,14 +93,14 @@ class SessionMemosSpec extends AnyFunSuite {
     val key = Some(s"$dir/documents")
     val (m1, t1) = queries.PipelinePack.phraseMergeMemo(docs, rounds = 1, cacheKey = key)
     t1.collect()
-    val entries = queries.PipelinePack.memoEntriesFor(s3)
+    val entries = SessionMemos.entries(s3, "pipeline")
     assert(entries > 0)
     val (m2, t2) = queries.PipelinePack.phraseMergeMemo(docs, rounds = 1, cacheKey = key)
     // the SAME cached instances — the loop ran once for both consumers
     assert((m1 eq m2) && (t1 eq t2))
-    assert(queries.PipelinePack.memoEntriesFor(s3) === entries)
+    assert(SessionMemos.entries(s3, "pipeline") === entries)
     SessionMemos.evict(s3)
-    assert(queries.PipelinePack.memoEntriesFor(s3) === 0)
+    assert(SessionMemos.entries(s3, "pipeline") === 0)
   }
 
   test("pq index memo: one encode per (session, corpus, geometry, codebook); evictable") {
@@ -112,15 +112,15 @@ class SessionMemosSpec extends AnyFunSuite {
     val emb = Tables.embeddings(s4, dir)
     val dim = emb.selectExpr("size(embedding)").head.getInt(0)
     val key = Some(s"$dir/embeddings#memospec")
-    val before = queries.AnnPack.memoEntriesFor(s4)
+    val before = SessionMemos.entries(s4, "ann")
     queries.AnnPack.pqTopK(emb, dim, cacheKey = key).collect()
-    val after1 = queries.AnnPack.memoEntriesFor(s4)
+    val after1 = SessionMemos.entries(s4, "ann")
     assert(after1 > before)
     queries.AnnPack.pqTopK(emb, dim, cacheKey = key).collect()
     // a second keyed call adds NO entry — the index was reused
-    assert(queries.AnnPack.memoEntriesFor(s4) === after1)
+    assert(SessionMemos.entries(s4, "ann") === after1)
     SessionMemos.evict(s4)
-    assert(queries.AnnPack.memoEntriesFor(s4) === 0)
+    assert(SessionMemos.entries(s4, "ann") === 0)
   }
 
   test("arm is idempotent per context") {

@@ -81,15 +81,15 @@ class TablesSpec extends AnyFunSuite {
     try {
       Tables.load(a, dir, "nation")
       Tables.load(a, dir, "region")
-      assert(Tables.memoEntriesFor(a) === 2)
-      assert(Tables.memoEntriesFor(b) === 0)
+      assert(SessionMemos.entries(a, "tables") === 2)
+      assert(SessionMemos.entries(b, "tables") === 0)
       // b's first read infers for itself: a's entry is not visible to it
       val (_, bJobs) = Jobs.during(b)(Tables.load(b, dir, "nation"))
       assert(bJobs >= 1)
-      assert(Tables.memoEntriesFor(b) === 1)
+      assert(SessionMemos.entries(b, "tables") === 1)
       SessionMemos.evict(a)
-      assert(Tables.memoEntriesFor(a) === 0)
-      assert(Tables.memoEntriesFor(b) === 1)
+      assert(SessionMemos.entries(a, "tables") === 0)
+      assert(SessionMemos.entries(b, "tables") === 1)
       val (_, again) = Jobs.during(a)(Tables.load(a, dir, "nation"))
       assert(again >= 1, "an evicted session infers again")
     } finally { SessionMemos.evict(a); SessionMemos.evict(b) }

@@ -29,51 +29,38 @@ class ExplainSpec extends AnyFunSuite {
     if (i >= 0) s.substring(0, i) else s
   }
 
-  private def withoutPairMemo[A](body: => A): A = {
-    graft.queries.AnnPack.pairMemoEnabled = false
-    graft.queries.AnnPack.clearPairMemo(spark) // see the hook's scaladoc
-    try body finally graft.queries.AnnPack.pairMemoEnabled = true
-  }
+  private def withoutPairMemo[A](body: => A): A =
+    graft.SessionMemos.bypassing(graft.queries.AnnPack.pairSets)(body) // see its scaladoc
 
   /** Same contract for PipelinePack's Jaccard pair memo: a memoized
     * persisted pair set would print as an InMemoryTableScan where the
     * shingle join tree should be, making plan-shape assertions depend on
     * which suite ran first (ADVICE r11).
     */
-  private def withoutJacMemo[A](body: => A): A = {
-    graft.queries.PipelinePack.jacMemoEnabled = false
-    graft.queries.PipelinePack.clearJacMemo(spark)
-    try body finally graft.queries.PipelinePack.jacMemoEnabled = true
-  }
+  private def withoutJacMemo[A](body: => A): A =
+    graft.SessionMemos.bypassing(graft.queries.PipelinePack.jaccardPairs)(body)
 
   /** Same contract for the PQ index memo (r12): a persisted codes/el
     * table would print as an InMemoryTableScan where the encode join
-    * tree should be.
+    * tree should be. The code arrays and coarse cells read through the
+    * index's corpus checkpoint, so they are bypassed with it.
     */
-  private def withoutPqIdxMemo[A](body: => A): A = {
-    graft.queries.AnnPack.pqIdxMemoEnabled = false
-    graft.queries.AnnPack.clearPqIdxMemo(spark)
-    try body finally graft.queries.AnnPack.pqIdxMemoEnabled = true
-  }
+  private def withoutPqIdxMemo[A](body: => A): A =
+    graft.SessionMemos.bypassing(graft.queries.AnnPack.pqIndexes,
+      graft.queries.AnnPack.pqCodeArrays, graft.queries.AnnPack.coarseCells)(body)
 
   /** And for the band-signature index memo (r12): d03/d32's candidate
     * joins must be observed over the real signature subtree.
     */
-  private def withoutSigMemo[A](body: => A): A = {
-    graft.queries.PipelinePack.sigMemoEnabled = false
-    graft.queries.PipelinePack.clearSigMemo(spark)
-    try body finally graft.queries.PipelinePack.sigMemoEnabled = true
-  }
+  private def withoutSigMemo[A](body: => A): A =
+    graft.SessionMemos.bypassing(graft.queries.PipelinePack.bandSigs)(body)
 
   /** And for the triangle-count memo (ADVICE r12): g21/g26 called through
     * the entry surface would otherwise print the memo's
     * InMemoryTableScan where the wedge-join tree should be.
     */
-  private def withoutTriMemo[A](body: => A): A = {
-    graft.graph.GraphTables.triMemoEnabled = false
-    graft.graph.GraphTables.clearTriMemo(spark)
-    try body finally graft.graph.GraphTables.triMemoEnabled = true
-  }
+  private def withoutTriMemo[A](body: => A): A =
+    graft.SessionMemos.bypassing(graft.graph.GraphTables.triangles)(body)
 
   /** Every EXECUTED node of the final adaptive plan. ReusedExchange
     * subtrees are NOT traversed: a reused exchange reads the original's
